@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dsp_spark.config import PipelineConfig, SinkConfig
 from dsp_spark.operators.router import route
 from dsp_spark.sinks import multicast as mc
-from dsp_spark.streaming.metrics import MetricsListener, observed
+from dsp_spark.streaming.metrics import RECEIVED, ROUTED, MetricsListener, observed
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -94,8 +94,12 @@ class Pipeline:
             "with_metrics": with_metrics,
         }
         src = build_stream(self.spark, self.config.source)
+        # received: source rows and bytes, before transform and router fan
+        # them out; routed: the rows every sink gets. Both are collected in
+        # the job that delivers the batch (streaming/metrics.py).
+        src = observed(src, RECEIVED, payload_bytes=True)
         df, fan = self.compose(src)
-        df = observed(df)
+        df = observed(df, ROUTED)
         writer = (
             df.writeStream.foreachBatch(fan)
             .option("checkpointLocation", checkpoint)
@@ -106,6 +110,8 @@ class Pipeline:
         elif processing_time:
             writer = writer.trigger(processingTime=processing_time)
         self.query = writer.start()
+        if self.listener is not None:
+            self.listener.watch(self.query.id, len(self.config.sinks))
         return self.query
 
     def reload(self, transform: Transform | None):

@@ -29,10 +29,6 @@ def u16_le(col: Column, pos: int) -> Column:
     return F.conv(_le_hex(col, pos, 2), 16, 10).cast("int")
 
 
-def u32_le(col: Column, pos: int) -> Column:
-    return F.conv(_le_hex(col, pos, 4), 16, 10).cast("long")
-
-
 def u64_le(col: Column, pos: int) -> Column:
     return F.conv(_le_hex(col, pos, 8), 16, 10).cast("long")
 

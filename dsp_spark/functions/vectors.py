@@ -34,10 +34,6 @@ def cosine(a: str, b: str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_rounded(a: str, b: str, digits: int = 6) -> Column:
-    return F.round(cosine(a, b), digits)
-
-
 def quantize_int8(a: str) -> tuple[Column, Column]:
     """Symmetric int8 quantization: (codes array<tinyint>, scale).
 

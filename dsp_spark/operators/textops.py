@@ -31,19 +31,6 @@ def tokens(col: str = "text") -> Column:
     return F.split(F.col(col), TOKEN_SPLIT)
 
 
-def char_shingles(col: str = "text", k: int = 5) -> Column:
-    """Character k-gram shingles.
-
-    duckdb mirror:
-    list_transform(range(1, greatest(length(text)-{k-1}, 1)+1),
-                   i -> substr(text, i, {k}))
-    """
-    return F.expr(
-        f"transform(sequence(1, greatest(length({col}) - {k - 1}, 1)), "
-        f"i -> substring({col}, i, {k}))"
-    )
-
-
 MINHASH_P = (1 << 31) - 1  # Mersenne prime; products stay < 2^62 (no overflow)
 
 

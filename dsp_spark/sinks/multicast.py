@@ -6,8 +6,13 @@ cache.hpp:51-117, send 65-76; design note doc/user-guide.adoc:191-196).
 
 Spark mapping: running N writeStream queries would re-read the source N
 times; to preserve one-consume/N-deliver semantics we use a single
-``foreachBatch`` that persists each micro-batch and writes it to every
-sink (SURVEY.md §2.2 K4). The N sinks share one checkpoint lineage —
+``foreachBatch`` that writes each micro-batch to every sink (SURVEY.md
+§2.2 K4). Each sink write is one Spark job and nothing else runs: with
+one sink the batch is computed exactly once, and only with two or more
+sinks is it persisted so the later writes read the cache instead of
+recomputing it. Delivery is not counted here — the received and sent
+counters come from the ``observe()`` metrics of that same job
+(streaming/metrics.py). The N sinks share one checkpoint lineage —
 documented deviation: per-sink progress is coupled (acceptable; the
 reference likewise stops all northbounds together, dsp.hpp:157-167).
 
@@ -33,35 +38,22 @@ class Multicast:
     """foreachBatch handler delivering each batch to every named sink."""
 
     sinks: dict[str, SinkFn] = field(default_factory=dict)
-    # per-sink delivered-row counters (reference: sent_messages_total, A3)
-    delivered: dict[str, int] = field(default_factory=dict)
 
     def attach(self, name: str, fn: SinkFn) -> "Multicast":
         """reference: cache::attach_northbound (cache.hpp:55-63)."""
         self.sinks[name] = fn
-        self.delivered.setdefault(name, 0)
         return self
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        if not self.sinks:
-            return
-        if len(self.sinks) > 1:
+        shared = len(self.sinks) > 1
+        if shared:
             batch = batch.persist()
         try:
-            n = batch.count()
-            for name, fn in self.sinks.items():
+            for fn in self.sinks.values():
                 fn(batch, epoch_id)
-                self.delivered[name] = self.delivered.get(name, 0) + n
         finally:
-            if len(self.sinks) > 1:
+            if shared:
                 batch.unpersist()
-
-
-def parquet_sink(path: str, mode: str = "append") -> SinkFn:
-    def write(batch: DataFrame, _epoch: int) -> None:
-        batch.write.mode(mode).parquet(path)
-
-    return write
 
 
 def file_sink(

@@ -11,10 +11,12 @@ buffer the stream reader drains each microbatch.
 Rows: (conn_id bigint, frame binary).
 
 Semantics & limits (documented deviations):
-* Offsets index the in-memory frame buffer; uncommitted ranges are
-  retained for microbatch retry, but a driver crash loses buffered
-  frames (the reference has the same at-most-once window — its TCP
-  bytes are gone once read). For durable replay, front with Kafka.
+* Offsets are absolute frame indexes into the in-memory buffer. Only
+  uncommitted frames are retained (for microbatch retry): a commit
+  drops every frame below its end offset, so the buffer holds at most
+  the frames not yet committed. A driver crash loses buffered frames
+  (the reference has the same at-most-once window — its TCP bytes are
+  gone once read). For durable replay, front with Kafka.
 * The listener lives on the driver (the reference is likewise a
   single-process server). Throughput scales with connections, not
   executors; at cluster scale this source is a bridge/test device —
@@ -38,7 +40,10 @@ class _Listener:
     """Accepts connections and reassembles frames into a shared buffer."""
 
     def __init__(self, host: str, port: int):
+        # frames[i] has absolute offset base + i; frames below base are
+        # committed and gone
         self.frames: list[tuple[int, bytes]] = []
+        self.base = 0
         self.lock = threading.Lock()
         self.next_conn = 0
         self.sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
@@ -82,12 +87,22 @@ class _Listener:
                     break  # unparseable stream: close (handler.cpp:101-102)
 
     def snapshot_len(self) -> int:
+        """Absolute offset one past the last received frame."""
         with self.lock:
-            return len(self.frames)
+            return self.base + len(self.frames)
 
     def slice(self, start: int, end: int) -> list[tuple[int, bytes]]:
+        """Frames with absolute offsets in [start, end); the part below
+        the committed base is gone and yields nothing."""
         with self.lock:
-            return self.frames[start:end]
+            return self.frames[max(start - self.base, 0) : max(end - self.base, 0)]
+
+    def prune(self, end: int) -> None:
+        """Drop the frames below absolute offset `end` (committed)."""
+        with self.lock:
+            if end > self.base:
+                del self.frames[: end - self.base]
+                self.base = end
 
 
 # One listener per (host, port) per process: Spark instantiates the
@@ -129,9 +144,8 @@ class TcpStreamReader(SimpleDataSourceStreamReader):
         return iter(self.listener.slice(start["idx"], end["idx"]))
 
     def commit(self, end: dict) -> None:
-        # retained frames before end could be pruned here; kept simple —
-        # the buffer is bounded by the query's consumption cadence.
-        pass
+        if self.listener is not None:
+            self.listener.prune(end["idx"])
 
 
 class TcpDataSource(DataSource):

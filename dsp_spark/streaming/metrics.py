@@ -7,10 +7,22 @@ sent_*/drop_*_total plus throughput stats refreshed every second
 Spark equivalent: a StreamingQueryListener accumulates the same
 counter names from QueryProgressEvent (rates come free:
 inputRowsPerSecond / processedRowsPerSecond), and `df.observe` feeds
-per-batch observed aggregates (bytes, per-label counts) without extra
-actions. If prometheus_client is installed, counters are exported on a
-scrape port (reference: interfaces.hpp:205-216, port 9555); otherwise
-they stay in-process (tests read them directly).
+per-batch observed aggregates in the job that delivers the batch, so
+counting costs no extra action. What each counter counts:
+
+* receive_messages_total / receive_bytes_total — rows the source read
+  (`numInputRows`) and their payload bytes, observed on the source frame
+  before the transform and router run;
+* process_messages_total — rows handed to the transform (= received);
+* sent_messages_total — rows delivered over all sinks: the routed-row
+  count observed after the router, times the pipeline's number of sinks
+  (every sink gets every routed row);
+* drop_messages_total — not yet fed.
+
+The `Summary:` line reports the received totals. If prometheus_client
+is installed, counters are exported on a scrape port (reference:
+interfaces.hpp:205-216, port 9555); otherwise they stay in-process
+(tests read them directly).
 """
 
 from __future__ import annotations
@@ -23,11 +35,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 
-def observed(df: DataFrame, name: str = "stats") -> DataFrame:
-    """Attach A1-style running totals: message count + payload bytes."""
+# observe() names: source rows and payload bytes, and rows after the router
+RECEIVED = "received"
+ROUTED = "routed"
+# the binary payload column of a source frame: `value` for the file and
+# Kafka sources, `frame` for dsp_tcp
+PAYLOAD_COLUMNS = ("value", "frame")
+
+
+def observed(df: DataFrame, name: str, *, payload_bytes: bool = False) -> DataFrame:
+    """Attach A1-style running totals: message count, plus the summed
+    length of the payload column when `payload_bytes` is set and `df`
+    has one."""
     cols: list[Column] = [F.count(F.lit(1)).alias("messages")]
-    if "value" in df.columns:
-        cols.append(F.sum(F.length("value")).alias("bytes"))
+    payload = next((c for c in PAYLOAD_COLUMNS if c in df.columns), None)
+    if payload_bytes and payload is not None:
+        cols.append(F.sum(F.length(payload)).alias("bytes"))
     return df.observe(name, *cols)
 
 
@@ -51,7 +74,8 @@ class Stats:
 
 
 class MetricsListener(StreamingQueryListener):
-    """Accumulates reference-named counters from query progress."""
+    """Accumulates reference-named counters from the progress of the
+    queries it watches (a listener hears every query in the session)."""
 
     def __init__(self) -> None:
         self.counters: dict[str, float] = {
@@ -64,9 +88,16 @@ class MetricsListener(StreamingQueryListener):
         self.stats = Stats()
         self.last_progress: dict | None = None
         self._prom = None
+        # query id -> number of sinks each of its routed rows goes to
+        self._sinks: dict[str, int] = {}
         # (query id, batchId) pairs already counted — progress reaches the
         # Python listener asynchronously, so sync() may see a batch first
         self._seen: set[tuple[str, int]] = set()
+
+    def watch(self, query_id: str, sinks: int) -> None:
+        """Count the progress of query `query_id`, whose foreachBatch
+        delivers every routed row to `sinks` sinks."""
+        self._sinks[str(query_id)] = sinks
 
     def export_prometheus(self, port: int) -> None:
         try:
@@ -81,7 +112,8 @@ class MetricsListener(StreamingQueryListener):
 
     # --- StreamingQueryListener hooks -------------------------------------
     def onQueryStarted(self, event) -> None:
-        self.stats = Stats()
+        if str(event.id) in self._sinks:  # a restart (reload) of a watched query
+            self.stats = Stats()
 
     def onQueryProgress(self, event) -> None:
         self.ingest(event.progress)
@@ -90,8 +122,9 @@ class MetricsListener(StreamingQueryListener):
         """Fold one StreamingQueryProgress into the counters (idempotent
         per (query id, batchId) so async listener events and sync() don't
         double-count)."""
+        sinks = self._sinks.get(str(p.id))
         key = (str(p.id), p.batchId)
-        if key in self._seen:
+        if sinks is None or key in self._seen:
             return
         self._seen.add(key)
         self.last_progress = {
@@ -100,18 +133,18 @@ class MetricsListener(StreamingQueryListener):
             "processedRowsPerSecond": p.processedRowsPerSecond,
             "batchId": p.batchId,
         }
-        self.counters["receive_messages_total"] += p.numInputRows or 0
-        self.counters["process_messages_total"] += p.numInputRows or 0
-        self.stats.messages += p.numInputRows or 0
-        obs = p.observedMetrics.get("stats") if p.observedMetrics else None
-        if obs is not None:
-            row = obs.asDict()
-            if row.get("bytes") is not None:
-                self.counters["receive_bytes_total"] += row["bytes"]
-                self.stats.bytes += row["bytes"]
-        if p.sink is not None and p.sink.numOutputRows is not None:
-            if p.sink.numOutputRows >= 0:
-                self.counters["sent_messages_total"] += p.sink.numOutputRows
+        rows = p.numInputRows or 0
+        self.counters["receive_messages_total"] += rows
+        self.counters["process_messages_total"] += rows
+        self.stats.messages += rows
+        obs = p.observedMetrics or {}
+        if RECEIVED in obs:
+            nbytes = obs[RECEIVED].asDict().get("bytes") or 0
+            self.counters["receive_bytes_total"] += nbytes
+            self.stats.bytes += nbytes
+        if ROUTED in obs:
+            routed = obs[ROUTED].asDict().get("messages") or 0
+            self.counters["sent_messages_total"] += routed * sinks
         if self._prom:
             for name, gauge in self._prom.items():
                 gauge.set(self.counters[name])

@@ -113,9 +113,65 @@ def test_streaming_router_multicast(spark, sf_dir, tmp_path):
     n_clicks = batch.filter(F.col("event_type") == "click").count()
     assert len(rows) == n_events + n_clicks  # wildcard copy + click copy
     assert {r["topic"] for r in rows} == {"clicks", "everything"}
-    # metrics listener accumulated the consumed rows
-    assert pipe.listener.counters["receive_messages_total"] >= n_events
+    # metrics listener accumulated the consumed rows, each read once
+    assert pipe.listener.counters["receive_messages_total"] == n_events
     assert pipe.summary().startswith("Summary: ")
+
+
+@pytest.mark.parametrize("n_sinks", [1, 2])
+def test_pipeline_counters_are_exact(spark, tmp_path, n_sinks):
+    """received = source rows and payload bytes; sent = routed rows over
+    all sinks; the source is read once per micro-batch whatever the
+    number of sinks (sum of numInputRows == source rows)."""
+    kinds = ("click", "view", "error")
+    rows = [(b"p" * (i % 13) + i.to_bytes(4, "little"), kinds[i % 3]) for i in range(3000)]
+    src = tmp_path / "in"
+    for part in (rows[:1000], rows[1000:]):  # two files, two micro-batches
+        spark.createDataFrame(part, "value binary, kind string").coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+    cfg = PipelineConfig.from_dict(
+        {
+            "interfaces": {
+                "southbound": {
+                    "type": "file",
+                    "path": str(src),
+                    "schema": "value binary, kind string",
+                    "options": {"maxFilesPerTrigger": "1"},
+                },
+                "northbound": [{"name": f"nb{i}", "type": "memory"} for i in range(n_sinks)],
+            },
+            "router": [
+                {"name": "clicks", "priority": 1,
+                 "condition": {"key": "type", "value": "click"},
+                 "action": "include", "subject": "clicks"},
+                {"name": "all", "priority": 2,
+                 "condition": {"key": "*", "value": "*"},
+                 "action": "include", "subject": "everything"},
+            ],
+        }
+    )
+
+    def to_messages(df):
+        return df.select(
+            F.create_map(F.lit("type"), F.col("kind")).alias("properties"),
+            F.lit("events").alias("topic"),
+            "value",
+        )
+
+    pipe = Pipeline(spark, cfg, transform=to_messages)
+    q = pipe.start(checkpoint=str(tmp_path / "ckpt"), available_now=True)
+    pipe.await_termination(120)
+
+    n_clicks = sum(1 for _v, k in rows if k == "click")
+    delivered = sum(len(store) for store in pipe.stores.values())
+    c = pipe.listener.counters
+    assert c["receive_messages_total"] == len(rows)
+    assert c["receive_bytes_total"] == sum(len(v) for v, _k in rows)
+    assert delivered == n_sinks * (len(rows) + n_clicks)
+    assert c["sent_messages_total"] == delivered
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows)
+    assert f"{len(rows)} messages" in pipe.summary()
 
 
 def test_windowed_counts_with_watermark(spark, events_stream, tmp_path):
