@@ -4,12 +4,13 @@ misreport every later round."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_headline_map_names_exist_in_catalog():
@@ -310,12 +311,26 @@ def test_plan_lock_not_rewritten_on_bare_decreases(tmp_path, monkeypatch):
     # semantics the policy relies on
 
 
-def test_gen_round_generates_all_sections():
+def test_gen_round_generates_all_sections(monkeypatch):
     """ROUND.md must carry every section the judge reads: catalog
-    delta, bench block, and the artifact checklist."""
-    from tools.gen_round import generate
+    delta, bench block, and the artifact checklist.
 
-    md = generate()
+    generate() renders the bench block from bench_full.json, which
+    bench.py writes at gate and which has been gitignored since 00ed351,
+    so a clean checkout never has it. The committed, immutable gate
+    snapshot BENCH_FULL_r14.json holds exactly that data and stands in
+    for it here: a patched _load supplies it, so no file is written."""
+    import tools.gen_round as gr
+
+    real_load = gr._load
+    snapshot = real_load("BENCH_FULL_r14.json")
+    assert snapshot is not None, "committed BENCH_FULL_r14.json is missing"
+
+    def load(name):
+        return snapshot if name == "bench_full.json" else real_load(name)
+
+    monkeypatch.setattr(gr, "_load", load)
+    md = gr.generate()
     for needle in (
         "# ROUND",
         "## Catalog:",
@@ -324,3 +339,10 @@ def test_gen_round_generates_all_sections():
         "PLAN_LOCK.json",
     ):
         assert needle in md, needle
+    # the block shows the supplied snapshot's numbers, not those of a
+    # stray bench_full.json left in the working tree
+    bench_line = (
+        f"catalog total {snapshot['value']} s over "
+        f"{len(snapshot['queries'])} entries"
+    )
+    assert bench_line in md, bench_line

@@ -31,7 +31,7 @@ def _n_files(root):
 
 
 def test_compaction_preserves_data_and_pruning(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.compact import compact
 
     out = tmp_path / "events_by_date"
@@ -76,7 +76,7 @@ def test_recovery_from_mid_swap_crash(spark, sf_dir, tmp_path):
     import json as _json
     import shutil
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.compact import _data_files, compact
 
     out = tmp_path / "ev"
@@ -115,7 +115,7 @@ def test_recrash_after_prior_successful_compaction(spark, sf_dir, tmp_path):
     import json as _json
     import shutil
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.compact import _data_files, compact
 
     out = tmp_path / "ev"
@@ -149,7 +149,7 @@ def test_cleanup_after_committed_swap_crash(spark, sf_dir, tmp_path):
     rows the interrupted rmtree already removed."""
     import json as _json
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.compact import compact
 
     out = tmp_path / "ev"
@@ -181,7 +181,7 @@ def test_cleanup_after_committed_swap_crash(spark, sf_dir, tmp_path):
 
 
 def test_compaction_clears_crash_residue(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.compact import compact
 
     out = tmp_path / "ev"

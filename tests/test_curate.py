@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 
 def test_curation_run_end_to_end(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.curate import curate
     from dsp_spark.operators import dedup as dd
 
@@ -126,7 +126,7 @@ def test_curate_stats_only_and_resume(spark, sf_dir, tmp_path):
     import os
     import shutil
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.curate import curate
 
     out = str(tmp_path / "cur")
@@ -203,7 +203,7 @@ def test_curate_spans_state_parity(spark, tmp_path):
 
     import pytest
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.curate import curate
     from tools.dedup_state import DEFAULTS, cmd_init, cmd_spans
 
@@ -272,7 +272,7 @@ def test_curate_strip_spans_stage(spark, sf_dir, tmp_path):
     the stripped output (the flag is part of the stage identity)."""
     import os
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.curate import curate
     from dsp_spark.operators.dedup import dup_span_intervals
 

@@ -15,7 +15,7 @@ from dsp_spark.session import read_table
 
 
 def _export(spark, sf_dir, out):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.export_packed import export_packed
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -55,7 +55,7 @@ def test_manifest_and_packing_invariants(spark, sf_dir, tmp_path):
 
 
 def test_export_is_partitioning_invariant(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.export_packed import export_packed
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
