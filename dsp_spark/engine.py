@@ -55,6 +55,7 @@ class Pipeline:
     stores: dict[str, list] = field(default_factory=dict)
     query = None
     _start_opts: dict = field(default_factory=dict, repr=False)
+    _listening: bool = field(default=False, repr=False)
 
     def compose(self, source_df: DataFrame) -> tuple[DataFrame, mc.Multicast]:
         """Assemble transform + router over a source frame and the
@@ -83,9 +84,12 @@ class Pipeline:
             raise ValueError("pipeline config has no southbound source")
         if with_metrics and self.listener is None:
             self.listener = MetricsListener()
-            self.spark.streams.addListener(self.listener)
             if self.config.metrics_port:
                 self.listener.export_prometheus(self.config.metrics_port)
+        if with_metrics and not self._listening:
+            # the same listener across reload(), so its counters carry over
+            self.spark.streams.addListener(self.listener)
+            self._listening = True
 
         self._start_opts = {
             "checkpoint": checkpoint,
@@ -182,14 +186,24 @@ class Pipeline:
             if self.listener is not None:
                 # listener events are async; reconcile from recentProgress
                 self.listener.sync(self.query)
+            if not self.query.isActive:
+                self._unlisten()
             return done
 
     def stop(self) -> None:
         if self.query is not None:
+            self.query.stop()
             if self.listener is not None:
                 self.listener.sync(self.query)
-            self.query.stop()
+            self._unlisten()
             self.query = None
+
+    def _unlisten(self) -> None:
+        """Deregister the listener once its query has ended, so no
+        finished pipeline keeps a Py4J callback for every later query."""
+        if self._listening:
+            self.spark.streams.removeListener(self.listener)
+            self._listening = False
 
     def summary(self) -> str | None:
         if self.listener is None:

@@ -7,14 +7,23 @@ cache.hpp:51-117, send 65-76; design note doc/user-guide.adoc:191-196).
 Spark mapping: running N writeStream queries would re-read the source N
 times; to preserve one-consume/N-deliver semantics we use a single
 ``foreachBatch`` that writes each micro-batch to every sink (SURVEY.md
-§2.2 K4). Each sink write is one Spark job and nothing else runs: with
-one sink the batch is computed exactly once, and only with two or more
-sinks is it persisted so the later writes read the cache instead of
-recomputing it. Delivery is not counted here — the received and sent
-counters come from the ``observe()`` metrics of that same job
-(streaming/metrics.py). The N sinks share one checkpoint lineage —
-documented deviation: per-sink progress is coupled (acceptable; the
-reference likewise stops all northbounds together, dsp.hpp:157-167).
+§2.2 K4). Each sink write is one Spark job and nothing else runs. With
+one sink the batch is computed exactly once by a direct call. With two
+or more sinks the batch is persisted once and the sinks are written
+concurrently, like the reference's northbounds that each send on their
+own: the first sink on the calling thread, the others on pool threads
+that keep the streaming query's job group and local properties
+(``inheritable_thread_target``), so ``query.stop()`` cancels every sink
+job. The concurrent tasks of the same persisted partition serialize on
+the block manager's write lock, so the batch is still computed once and
+the later sinks read the cache. A failing sink does not stop the others;
+after all sinks have returned, the first error in attach order is raised
+(reference: "send to all, false if any fails"). Delivery is not counted
+here — the received and sent counters come from the ``observe()``
+metrics of the delivering jobs (streaming/metrics.py). The N sinks share
+one checkpoint lineage — documented deviation: per-sink progress is
+coupled (acceptable; the reference likewise stops all northbounds
+together, dsp.hpp:157-167).
 
 Also here: the opt-in load-shedding stage (reference T7: try_send drops
 on full queue, kafka.hpp:684-696). Spark's native model is backpressure
@@ -25,8 +34,10 @@ accounts drops with drop_type='load_shed' like svc/handler.cpp:157-159.
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,15 +56,36 @@ class Multicast:
         return self
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        shared = len(self.sinks) > 1
-        if shared:
-            batch = batch.persist()
-        try:
-            for fn in self.sinks.values():
+        fns = list(self.sinks.values())
+        if len(fns) < 2:
+            for fn in fns:
                 fn(batch, epoch_id)
+            return
+        batch = batch.persist()
+        try:
+            session = batch.sparkSession
+            with ThreadPoolExecutor(max_workers=len(fns) - 1) as pool:
+                # one wrapper per sink: each clones the caller's local
+                # properties, so concurrent jobs never share one Properties
+                rest = [
+                    pool.submit(inheritable_thread_target(session)(fn), batch, epoch_id)
+                    for fn in fns[1:]
+                ]
+                errors = [_error_of(fns[0], batch, epoch_id)]
+                errors += [f.exception() for f in rest]
         finally:
-            if shared:
-                batch.unpersist()
+            batch.unpersist()
+        first = next((e for e in errors if e is not None), None)
+        if first is not None:
+            raise first
+
+
+def _error_of(fn: SinkFn, batch: DataFrame, epoch_id: int) -> Exception | None:
+    try:
+        fn(batch, epoch_id)
+    except Exception as e:  # noqa: BLE001 — re-raised by the caller
+        return e
+    return None
 
 
 def file_sink(

@@ -27,6 +27,7 @@ interfaces.hpp:205-216, port 9555); otherwise they stay in-process
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -90,9 +91,12 @@ class MetricsListener(StreamingQueryListener):
         self._prom = None
         # query id -> number of sinks each of its routed rows goes to
         self._sinks: dict[str, int] = {}
-        # (query id, batchId) pairs already counted — progress reaches the
-        # Python listener asynchronously, so sync() may see a batch first
-        self._seen: set[tuple[str, int]] = set()
+        # query id -> highest batchId counted. Progress reaches the Python
+        # listener asynchronously, so sync() may see a batch first; each of
+        # the two sees a query's batches in order, so a high-water mark is
+        # enough to count every batch once.
+        self._counted: dict[str, int] = {}
+        self._lock = threading.Lock()
 
     def watch(self, query_id: str, sinks: int) -> None:
         """Count the progress of query `query_id`, whose foreachBatch
@@ -119,14 +123,18 @@ class MetricsListener(StreamingQueryListener):
         self.ingest(event.progress)
 
     def ingest(self, p) -> None:
-        """Fold one StreamingQueryProgress into the counters (idempotent
-        per (query id, batchId) so async listener events and sync() don't
-        double-count)."""
-        sinks = self._sinks.get(str(p.id))
-        key = (str(p.id), p.batchId)
-        if sinks is None or key in self._seen:
+        """Fold one StreamingQueryProgress into the counters (a batchId at
+        or below the query's high-water mark is skipped, so async listener
+        events and sync() don't double-count)."""
+        with self._lock:
+            self._ingest(p)
+
+    def _ingest(self, p) -> None:
+        query_id = str(p.id)
+        sinks = self._sinks.get(query_id)
+        if sinks is None or p.batchId <= self._counted.get(query_id, -1):
             return
-        self._seen.add(key)
+        self._counted[query_id] = p.batchId
         self.last_progress = {
             "numInputRows": p.numInputRows,
             "inputRowsPerSecond": p.inputRowsPerSecond,

@@ -174,6 +174,132 @@ def test_pipeline_counters_are_exact(spark, tmp_path, n_sinks):
     assert f"{len(rows)} messages" in pipe.summary()
 
 
+def test_listener_is_removed_on_stop_and_kept_across_reload(spark, tmp_path):
+    """stop() deregisters the metrics listener and reload() registers the
+    same one again, so its totals carry over; removing it once more after
+    stop(), as perfbench does, is a no-op."""
+    jsqm = spark.streams._jsqm
+    src = tmp_path / "in"
+
+    def add_file(values):
+        spark.createDataFrame([(v,) for v in values], "v string").coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+
+    add_file(["a", "b"])
+    cfg = PipelineConfig.from_dict(
+        {
+            "interfaces": {
+                "southbound": {"type": "file", "path": str(src), "schema": "v string"},
+                "northbound": [{"name": f"nb{i}", "type": "memory"} for i in range(2)],
+            }
+        }
+    )
+    before = len(jsqm.listListeners())
+    pipe = Pipeline(spark, cfg)
+    pipe.start(checkpoint=str(tmp_path / "ckpt"), processing_time="100 milliseconds")
+    assert len(jsqm.listListeners()) == before + 1
+    pipe.query.processAllAvailable()
+    add_file(["c", "d", "e"])
+    listener = pipe.listener
+    pipe.reload(None)
+    assert pipe.listener is listener
+    assert len(jsqm.listListeners()) == before + 1
+    pipe.query.processAllAvailable()
+    pipe.stop()
+    assert len(jsqm.listListeners()) == before
+    assert listener.counters["receive_messages_total"] == 5
+    assert listener.counters["sent_messages_total"] == 2 * 5
+    assert sum(len(store) for store in pipe.stores.values()) == 2 * 5
+    spark.streams.removeListener(listener)
+    assert len(jsqm.listListeners()) == before
+
+
+def test_available_now_pipeline_leaves_no_listener(spark, tmp_path):
+    """Once an availableNow query has ended, await_termination()
+    deregisters the listener; the counters stay readable."""
+    src = tmp_path / "in"
+    spark.createDataFrame([("a",), ("b",)], "v string").write.parquet(str(src))
+    cfg = PipelineConfig.from_dict(
+        {
+            "interfaces": {
+                "southbound": {"type": "file", "path": str(src), "schema": "v string"},
+                "northbound": [{"name": "nb", "type": "memory"}],
+            }
+        }
+    )
+    jsqm = spark.streams._jsqm
+    before = len(jsqm.listListeners())
+    pipe = Pipeline(spark, cfg)
+    pipe.start(checkpoint=str(tmp_path / "ckpt"), available_now=True)
+    assert pipe.await_termination(120)
+    assert len(jsqm.listListeners()) == before
+    assert pipe.listener.counters["receive_messages_total"] == 2
+
+
+def test_listener_counts_each_batch_once():
+    """Progress of a batchId at or below the query's high-water mark (a
+    duplicate, or an older batch seen late) is not counted again."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import Row
+
+    from dsp_spark.streaming.metrics import ROUTED, MetricsListener
+
+    listener = MetricsListener()
+    listener.watch("q", 2)
+    for batch_id, rows in [(0, 10), (1, 20), (1, 20), (0, 10), (2, 5), (1, 20)]:
+        listener.ingest(
+            SimpleNamespace(
+                id="q", batchId=batch_id, numInputRows=rows,
+                inputRowsPerSecond=0.0, processedRowsPerSecond=0.0,
+                observedMetrics={ROUTED: Row(messages=rows)},
+            )
+        )
+    assert listener.counters["receive_messages_total"] == 35
+    assert listener.counters["sent_messages_total"] == 2 * 35
+    assert listener.last_progress["batchId"] == 2
+
+
+def test_listener_counts_each_batch_once_under_concurrent_ingest():
+    """The listener thread and sync() ingest the same progress stream at
+    once; with a short switch interval, an unlocked check-then-act on
+    the high-water mark would count some batches twice."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from dsp_spark.streaming.metrics import MetricsListener
+
+    progress = [
+        SimpleNamespace(
+            id="q", batchId=b, numInputRows=b + 1,
+            inputRowsPerSecond=0.0, processedRowsPerSecond=0.0, observedMetrics={},
+        )
+        for b in range(2000)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _round in range(5):
+            listener = MetricsListener()
+            listener.watch("q", 1)
+
+            def feed(listener=listener):
+                for p in progress:
+                    listener.ingest(p)
+
+            threads = [threading.Thread(target=feed) for _ in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+            assert listener.counters["receive_messages_total"] == sum(range(1, 2001))
+    finally:
+        sys.setswitchinterval(interval)
+
+
 def test_windowed_counts_with_watermark(spark, events_stream, tmp_path):
     stream, batch = events_stream
     agg = stateful.windowed_counts(stream, window="1 hour", watermark="2 hours")
