@@ -1,24 +1,41 @@
-"""Custom stateful streaming operators.
+"""Per-key stateful streaming operators.
 
 The reference keeps no per-key state at all (SURVEY.md §2.4) — its only
 loop-carried state is the TCP reassembly buffer. These operators add
-the stateful layer a telemetry pipeline actually needs, built on
-``applyInPandasWithState`` (per-key state, watermark-driven timeouts):
+the stateful layer a telemetry pipeline actually needs: sequence-gap
+detection over the heartbeat protocol (sim.cpp:83-88), running
+z-scores, first-seen and near-dup ingest filters, bounded-state
+sketches (Misra-Gries, HyperLogLog, log-histogram quantiles, Bloom,
+Count-Min, AMS, bottom-k, Benford counters), changelog compaction,
+attribution, funnels, and CUSUM / PSI / Mann-Kendall monitors.
 
-* sequence-gap detection over heartbeat (client_id, sequence) — the
-  natural monitoring query for the reference's own heartbeat protocol
-  (sequence increments by 1 per client, sim.cpp:83-88); emits one row
-  per detected gap.
+Every fold but one runs through :func:`_fold`, the one owner of the
+``applyInPandasWithState`` protocol:
 
-Batch twins (lag-window forms) live beside each operator so the same
-semantics are oracle-testable; the streaming form holds only
-last-seen-per-key state => state size is O(#keys), not O(#events).
+* ``step(key, rows, st) -> (new_st, out_rows)`` sees ALL of the key's
+  rows in the micro-batch as one pandas frame (the Arrow chunks of
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows are
+  concatenated first) and the key's state tuple ``st``;
+* a key with no state gets a fresh ``init()`` — a callable, so array
+  state never shares a mutable default between keys;
+* ``new_st`` is always written back; ``out_rows`` is a list of row
+  dicts, and an empty list emits nothing.
+
+``session_close_stream`` calls ``applyInPandasWithState`` directly: it
+is the one fold on an event-time timeout, so it is also invoked with no
+rows when the timeout fires and removes its state on close. Neither
+fits the step contract, so ``_fold`` has no timeout option.
+
+Batch twins live beside each operator so the same semantics are
+oracle-testable; every fold's state is O(#keys) (or a fixed sketch per
+shard), never O(#events).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from decimal import ROUND_HALF_UP, Decimal
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -52,42 +69,67 @@ def _cents_round(v: float) -> int:
     )
 
 
+def _fold(
+    df: DataFrame,
+    keys: list[str],
+    step: Callable[[tuple, pd.DataFrame, tuple], tuple[tuple, list[dict]]],
+    *,
+    out: str,
+    state: str,
+    init: Callable[[], tuple],
+    mode: str,
+) -> DataFrame:
+    """``df`` grouped by ``keys``, folded per key by ``step`` with
+    state of DDL ``state`` and output rows of DDL ``out`` (the module
+    docstring states the step contract)."""
+
+    def fn(
+        key: tuple, batches: Iterator[pd.DataFrame], gs: Any
+    ) -> Iterator[pd.DataFrame]:
+        chunks = list(batches)
+        rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        new_st, out_rows = step(key, rows, gs.get if gs.exists else init())
+        gs.update(new_st)
+        if out_rows:
+            yield pd.DataFrame(out_rows)
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf="NoTimeout",
+    )
+
+
 GAP_SCHEMA = "client_id bigint, gap_start bigint, gap_end bigint, missed bigint"
 _STATE_SCHEMA = "last_seq bigint"
 
 
-def _gap_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _gap_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (client_id,) = key
-    last = state.get[0] if state.exists else None
+    (last,) = st
     gaps: list[dict] = []
-    for pdf in batches:
-        for seq in sorted(int(s) for s in pdf["sequence"]):
-            if last is not None and seq > last + 1:
-                gaps.append(
-                    {
-                        "client_id": client_id,
-                        "gap_start": last + 1,
-                        "gap_end": seq - 1,
-                        "missed": seq - 1 - last,
-                    }
-                )
-            if last is None or seq > last:
-                last = seq
-    state.update((last,))
-    if gaps:
-        yield pd.DataFrame(gaps)
+    for seq in sorted(int(s) for s in rows["sequence"]):
+        if last is not None and seq > last + 1:
+            gaps.append(
+                {
+                    "client_id": client_id,
+                    "gap_start": last + 1,
+                    "gap_end": seq - 1,
+                    "missed": seq - 1 - last,
+                }
+            )
+        if last is None or seq > last:
+            last = seq
+    return (last,), gaps
 
 
 def sequence_gaps_stream(heartbeats: DataFrame) -> DataFrame:
     """Streaming per-client gap detector; input needs client_id, sequence."""
-    return heartbeats.groupBy("client_id").applyInPandasWithState(
-        _gap_fn,
-        outputStructType=GAP_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _fold(
+        heartbeats, ["client_id"], _gap_step,
+        out=GAP_SCHEMA, state=_STATE_SCHEMA, init=lambda: (None,), mode="append",
     )
 
 
@@ -108,68 +150,36 @@ def sequence_gaps_batch(heartbeats: DataFrame) -> DataFrame:
 
 
 FIRST_SEEN_SCHEMA = "content_hash string, first_id bigint"
-
-try:  # Spark 4 transformWithState API
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-except ImportError:  # pragma: no cover - older Spark
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = Any  # type: ignore[assignment,misc]
+_FIRST_SEEN_STATE = "first_id bigint"
 
 
-class FirstSeenProcessor(StatefulProcessor):
-    """Streaming exactly-first dedup on Spark 4's transformWithState API.
-
-    Emits each key once, the first time it is ever seen — the streaming
-    twin of exact_dedup: state is one value per content hash
-    (O(#distinct keys), RocksDB-backed on a real cluster), so an
-    unbounded duplicate stream dedups with bounded memory per key.
-    """
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self.seen = handle.getValueState("seen", "first_id bigint")
-
-    def handleInputRows(self, key, rows, timerValues):
-        first_id = None
-        for pdf in rows:
-            batch_min = int(pdf["row_id"].min())
-            first_id = batch_min if first_id is None else min(first_id, batch_min)
-        if not self.seen.exists() and first_id is not None:
-            self.seen.update((first_id,))
-            yield pd.DataFrame({"content_hash": [key[0]], "first_id": [first_id]})
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithState needs protobuf for its state-server protocol."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+def _first_seen_step(
+    key: tuple, rows: pd.DataFrame, st: tuple
+) -> tuple[tuple, list[dict]]:
+    """Emit each key once, the first time it is ever seen: its smallest
+    id in that micro-batch, which is stored and never emitted again."""
+    if st[0] is not None:
+        return st, []
+    first_id = int(rows["row_id"].min())
+    return (first_id,), [{"content_hash": key[0], "first_id": first_id}]
 
 
 def first_seen_stream(df: DataFrame, *, key_col: str, id_col: str) -> DataFrame:
     """Streaming first-occurrence dedup; input needs key_col + id_col.
 
-    Requires protobuf at runtime (Spark's transformWithState state
-    protocol); check :func:`tws_available` first. For a
-    protobuf-free alternative with bounded state use
+    The streaming twin of exact_dedup: state is one bigint per content
+    hash (O(#distinct keys), RocksDB-backed on a real cluster), so an
+    unbounded duplicate stream dedups with bounded memory per key. For
+    state bounded by time instead of keys use
     ``dropDuplicatesWithinWatermark`` (covered in tests).
     """
     keyed = df.select(
         F.col(key_col).alias("content_hash"), F.col(id_col).alias("row_id")
     )
-    return keyed.groupBy("content_hash").transformWithStateInPandas(
-        statefulProcessor=FirstSeenProcessor(),
-        outputStructType=FIRST_SEEN_SCHEMA,
-        outputMode="append",
-        timeMode="none",
+    return _fold(
+        keyed, ["content_hash"], _first_seen_step,
+        out=FIRST_SEEN_SCHEMA, state=_FIRST_SEEN_STATE, init=lambda: (None,),
+        mode="append",
     )
 
 
@@ -249,20 +259,14 @@ def _zscore_point(n: int, s: int, s2: int, v_cents: int) -> float | None:
     return (v_cents - mean) / (var**0.5)
 
 
-def _z_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _z_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (user_id,) = key
-    n, s, s2 = state.get if state.exists else (0, 0, 0)
+    n, s, s2 = st
     out: list[dict] = []
-    rows: list[tuple] = []
-    for pdf in batches:
-        rows.extend(
-            zip(pdf["ts"], pdf["event_id"], pdf["value"])
-        )
+    triples = zip(rows["ts"], rows["event_id"], rows["value"])
     # event-time order inside the batch: state must evolve as if rows
     # arrived one at a time (matches the batch twin's window ordering)
-    for _ts, eid, v in sorted(rows, key=lambda r: (r[0], r[1])):
+    for _ts, eid, v in sorted(triples, key=lambda r: (r[0], r[1])):
         v_cents = _cents_round(v)  # batch twin uses F.round(value*100)
         z = _zscore_point(n, s, s2, v_cents)
         if z is not None and abs(z) >= _Z_THRESHOLD:
@@ -275,9 +279,7 @@ def _z_fn(
                 }
             )
         n, s, s2 = n + 1, s + v_cents, s2 + v_cents * v_cents
-    state.update((n, s, s2))
-    if out:
-        yield pd.DataFrame(out)
+    return (n, s, s2), out
 
 
 def running_zscore_stream(events: DataFrame) -> DataFrame:
@@ -285,14 +287,10 @@ def running_zscore_stream(events: DataFrame) -> DataFrame:
     the running mean/std of that user's PRIOR events (cents-exact
     integer moments — state is 3 numbers per user, O(#keys) total).
     The online twin of queries/windows.py:events_anomaly_zscore."""
-    return events.select("user_id", "ts", "event_id", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _z_fn,
-        outputStructType=ZSCORE_SCHEMA,
-        stateStructType=_Z_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _fold(
+        events.select("user_id", "ts", "event_id", "value"), ["user_id"], _z_step,
+        out=ZSCORE_SCHEMA, state=_Z_STATE_SCHEMA, init=lambda: (0, 0, 0),
+        mode="append",
     )
 
 
@@ -385,30 +383,17 @@ def near_dup_bands(
     )
 
 
-def _witness_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _witness_step(
+    key: tuple, rows: pd.DataFrame, st: tuple
+) -> tuple[tuple, list[dict]]:
     (band_key,) = key
-    ids: set[int] = set()
-    for pdf in batches:
-        ids.update(int(x) for x in pdf["doc_id"])
-    ordered = sorted(ids)
-    if not ordered:
-        return
-    if state.exists:
-        witness = int(state.get[0])
-    else:
-        witness = ordered[0]
-        state.update((witness,))
-    dups = [i for i in ordered if i != witness]
-    if dups:
-        yield pd.DataFrame(
-            {
-                "band_key": [band_key] * len(dups),
-                "doc_id": dups,
-                "witness_id": [witness] * len(dups),
-            }
-        )
+    ordered = sorted({int(x) for x in rows["doc_id"]})
+    witness = ordered[0] if st[0] is None else int(st[0])
+    return (witness,), [
+        {"band_key": band_key, "doc_id": i, "witness_id": witness}
+        for i in ordered
+        if i != witness
+    ]
 
 
 def near_dup_candidates_stream(
@@ -436,12 +421,10 @@ def near_dup_candidates_stream(
     bands_df = near_dup_bands(
         docs, id_col=id_col, text_col=text_col, n_hashes=n_hashes, bands=bands, k=k
     )
-    return bands_df.groupBy("band_key").applyInPandasWithState(
-        _witness_fn,
-        outputStructType=NEAR_DUP_SCHEMA,
-        stateStructType=_WITNESS_STATE,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _fold(
+        bands_df, ["band_key"], _witness_step,
+        out=NEAR_DUP_SCHEMA, state=_WITNESS_STATE, init=lambda: (None,),
+        mode="append",
     )
 
 
@@ -473,9 +456,7 @@ _HH_STATE_SCHEMA = "items array<string>, counts array<bigint>, dec bigint"
 HH_CAPACITY = 16
 
 
-def _hh_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _hh_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     """Misra-Gries summary for one shard.
 
     Classic bounded-state frequency sketch: at most `HH_CAPACITY`
@@ -488,31 +469,22 @@ def _hh_fn(
     stream length, key cardinality, and batch count.
     """
     (shard,) = key
-    if state.exists:
-        items, counts, dec = state.get
-        counters = dict(zip(list(items), [int(c) for c in counts]))
-        dec = int(dec)
-    else:
-        counters, dec = {}, 0
-    for pdf in batches:
-        for item in pdf["item"]:
-            item = str(item)
-            if item in counters:
-                counters[item] += 1
-            elif len(counters) < HH_CAPACITY:
-                counters[item] = 1
-            else:
-                dec += 1
-                counters = {k: c - 1 for k, c in counters.items() if c > 1}
-    state.update((list(counters.keys()), list(counters.values()), dec))
-    yield pd.DataFrame(
-        {
-            "shard": shard,
-            "item": list(counters.keys()),
-            "est_count": list(counters.values()),
-            "decrements": dec,
-        }
-    )
+    items, counts, dec = st
+    counters = dict(zip(list(items), [int(c) for c in counts]))
+    dec = int(dec)
+    for item in rows["item"]:
+        item = str(item)
+        if item in counters:
+            counters[item] += 1
+        elif len(counters) < HH_CAPACITY:
+            counters[item] = 1
+        else:
+            dec += 1
+            counters = {k: c - 1 for k, c in counters.items() if c > 1}
+    return (list(counters.keys()), list(counters.values()), dec), [
+        {"shard": shard, "item": item, "est_count": c, "decrements": dec}
+        for item, c in counters.items()
+    ]
 
 
 def heavy_hitters_stream(
@@ -536,12 +508,10 @@ def heavy_hitters_stream(
         .alias("shard"),
         F.col(item_col).cast("string").alias("item"),
     )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _hh_fn,
-        outputStructType=HH_SCHEMA,
-        stateStructType=_HH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["shard"], _hh_step,
+        out=HH_SCHEMA, state=_HH_STATE_SCHEMA, init=lambda: ([], [], 0),
+        mode="update",
     )
 
 
@@ -582,9 +552,7 @@ def _hll_estimate(regs: list[int]) -> float:
     return raw
 
 
-def _hlld_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _hlld_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     """One HyperLogLog sketch per key: 2^HLL_B max-rank registers.
 
     md5-derived hashing keeps the registers deterministic across
@@ -596,27 +564,19 @@ def _hlld_fn(
     import hashlib
 
     (k,) = key
-    regs = (
-        [int(r) for r in state.get[0]] if state.exists else [0] * _HLL_M
-    )
-    for pdf in batches:
-        for v in pdf["item"]:
-            h = int(
-                hashlib.md5(str(v).encode()).hexdigest()[:16], 16
-            )
-            bucket = h & (_HLL_M - 1)
-            w = h >> HLL_B
-            rank = (64 - HLL_B) - w.bit_length() + 1
-            if rank > regs[bucket]:
-                regs[bucket] = rank
-    state.update((regs,))
-    yield pd.DataFrame(
-        {
-            "key": [k],
-            "estimate": [_hll_estimate(regs)],
-            "n_zero_regs": [regs.count(0)],
-        }
-    )
+    regs = [int(r) for r in st[0]]
+    for v in rows["item"]:
+        h = int(
+            hashlib.md5(str(v).encode()).hexdigest()[:16], 16
+        )
+        bucket = h & (_HLL_M - 1)
+        w = h >> HLL_B
+        rank = (64 - HLL_B) - w.bit_length() + 1
+        if rank > regs[bucket]:
+            regs[bucket] = rank
+    return (regs,), [
+        {"key": k, "estimate": _hll_estimate(regs), "n_zero_regs": regs.count(0)}
+    ]
 
 
 def approx_distinct_stream(
@@ -634,12 +594,10 @@ def approx_distinct_stream(
         F.col(key_col).cast("string").alias("key"),
         F.col(item_col).cast("string").alias("item"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _hlld_fn,
-        outputStructType=HLLD_SCHEMA,
-        stateStructType=_HLLD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["key"], _hlld_step,
+        out=HLLD_SCHEMA, state=_HLLD_STATE_SCHEMA, init=lambda: ([0] * _HLL_M,),
+        mode="update",
     )
 
 
@@ -683,42 +641,35 @@ def _qh_quantile(bins: list[int], n: int, q: float) -> float:
     return 0.0
 
 
-def _qh_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _qh_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (k,) = key
-    if state.exists:
-        bins, n, max_v = state.get
-        bins = [int(b) for b in bins]
-        n, max_v = int(n), float(max_v)
-    else:
-        bins, n, max_v = [0] * QH_BINS, 0, 0.0
-    for pdf in batches:
-        for v in pdf["v_cents"]:
-            if pd.isna(v):
-                # null input, or a value that overflowed the
-                # decimal(18,2) cast — name the contract instead of
-                # dying on "cannot convert float NaN to integer"
-                raise ValueError(
-                    f"quantile_histogram_stream key {k!r}: null or "
-                    "decimal-overflow value in the stream"
-                )
-            c = int(v)
-            bins[_qh_bin(c)] += 1
-            n += 1
-            if c / 100.0 > max_v:
-                max_v = c / 100.0
-    state.update((bins, n, max_v))
-    yield pd.DataFrame(
+    bins, n, max_v = st
+    bins = [int(b) for b in bins]
+    n, max_v = int(n), float(max_v)
+    for v in rows["v_cents"]:
+        if pd.isna(v):
+            # null input, or a value that overflowed the
+            # decimal(18,2) cast — name the contract instead of
+            # dying on "cannot convert float NaN to integer"
+            raise ValueError(
+                f"quantile_histogram_stream key {k!r}: null or "
+                "decimal-overflow value in the stream"
+            )
+        c = int(v)
+        bins[_qh_bin(c)] += 1
+        n += 1
+        if c / 100.0 > max_v:
+            max_v = c / 100.0
+    return (bins, n, max_v), [
         {
-            "key": [k],
-            "n": [n],
-            "p50": [_qh_quantile(bins, n, 0.50)],
-            "p90": [_qh_quantile(bins, n, 0.90)],
-            "p99": [_qh_quantile(bins, n, 0.99)],
-            "max_v": [max_v],
+            "key": k,
+            "n": n,
+            "p50": _qh_quantile(bins, n, 0.50),
+            "p90": _qh_quantile(bins, n, 0.90),
+            "p99": _qh_quantile(bins, n, 0.99),
+            "max_v": max_v,
         }
-    )
+    ]
 
 
 def quantile_histogram_stream(
@@ -743,12 +694,10 @@ def quantile_histogram_stream(
         .cast("bigint")
         .alias("v_cents"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _qh_fn,
-        outputStructType=QH_SCHEMA,
-        stateStructType=_QH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["key"], _qh_step,
+        out=QH_SCHEMA, state=_QH_STATE_SCHEMA, init=lambda: ([0] * QH_BINS, 0, 0.0),
+        mode="update",
     )
 
 
@@ -770,9 +719,13 @@ def _bloom_probes(item: str) -> list[int]:
     ]
 
 
-def _bloom_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _bloom_init() -> tuple:
+    # 63 bits per word: bit 63 of a set word would overflow the
+    # SIGNED bigint state column and round-trip as NULL
+    return [0] * (_BLOOM_M // 63 + 1), 0
+
+
+def _bloom_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     """Bloom-filter membership per shard: NEVER a false negative (a
     true repeat is always flagged), false positives at the classic
     (1 - e^(-kn/m))^k rate. State is a fixed 8 KB bitset per shard —
@@ -780,29 +733,18 @@ def _bloom_fn(
     set grows with every distinct key. md5 probes keep replays from
     flipping new bits, so re-delivery cannot change earlier verdicts."""
     (shard,) = key
-    if state.exists:
-        words, n = list(state.get[0]), int(state.get[1])
-        words = [int(w) for w in words]
-    else:
-        # 63 bits per word: bit 63 of a set word would overflow the
-        # SIGNED bigint state column and round-trip as NULL
-        words, n = [0] * (_BLOOM_M // 63 + 1), 0
-    out_items, out_seen = [], []
-    for pdf in batches:
-        for item in pdf["item"]:
-            item = str(item)
-            probes = _bloom_probes(item)
-            seen = all(words[p // 63] >> (p % 63) & 1 for p in probes)
-            if not seen:
-                for p in probes:
-                    words[p // 63] |= 1 << (p % 63)
-                n += 1
-            out_items.append(item)
-            out_seen.append(bool(seen))
-    state.update((words, n))
-    yield pd.DataFrame(
-        {"shard": shard, "item": out_items, "probably_seen": out_seen}
-    )
+    words, n = [int(w) for w in st[0]], int(st[1])
+    out: list[dict] = []
+    for item in rows["item"]:
+        item = str(item)
+        probes = _bloom_probes(item)
+        seen = all(words[p // 63] >> (p % 63) & 1 for p in probes)
+        if not seen:
+            for p in probes:
+                words[p // 63] |= 1 << (p % 63)
+            n += 1
+        out.append({"shard": shard, "item": item, "probably_seen": bool(seen)})
+    return (words, n), out
 
 
 def bloom_first_seen_stream(
@@ -822,12 +764,10 @@ def bloom_first_seen_stream(
         .alias("shard"),
         F.col(item_col).cast("string").alias("item"),
     )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _bloom_fn,
-        outputStructType=BLOOM_SCHEMA,
-        stateStructType=_BLOOM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["shard"], _bloom_step,
+        out=BLOOM_SCHEMA, state=_BLOOM_STATE_SCHEMA, init=_bloom_init,
+        mode="append",
     )
 
 
@@ -967,9 +907,9 @@ def gram_anchor_positions(
     )
 
 
-def _span_witness_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _span_witness_step(
+    key: tuple, rows: pd.DataFrame, st: tuple
+) -> tuple[tuple, list[dict]]:
     """Per gram-shard Bloom over 8-gram anchors: a doc's anchors are
     judged against the bitset AS OF the doc's arrival (docs process in
     doc_id order; a doc's grams are all checked BEFORE any of them is
@@ -982,43 +922,28 @@ def _span_witness_fn(
     forever, the property that lets sub-document dedup run on an
     unbounded ingest stream."""
     (shard,) = key
-    if state.exists:
-        words, n = [int(w) for w in state.get[0]], int(state.get[1])
-    else:
-        words, n = [0] * (_BLOOM_M // 63 + 1), 0
-    pdfs = list(batches)
-    out_doc, out_pos, out_seen = [], [], []
-    if pdfs:
-        allp = pd.concat(pdfs, ignore_index=True).sort_values(
-            ["doc_id", "pos"], kind="mergesort"
-        )
-        for doc_id, grp in allp.groupby("doc_id", sort=True):
-            probed = [
-                (int(p), _bloom_probes(str(g)))
-                for p, g in zip(grp["pos"], grp["gram"])
-            ]
-            # check the whole doc first...
-            for pos, probes in probed:
-                seen = all(words[p // 63] >> (p % 63) & 1 for p in probes)
-                out_doc.append(int(doc_id))
-                out_pos.append(pos)
-                out_seen.append(bool(seen))
-            # ...then insert its grams for every LATER doc
-            for _pos, probes in probed:
-                if not all(words[p // 63] >> (p % 63) & 1 for p in probes):
-                    n += 1
-                for p in probes:
-                    words[p // 63] |= 1 << (p % 63)
-    state.update((words, n))
-    if out_doc:
-        yield pd.DataFrame(
-            {
-                "shard": shard,
-                "doc_id": out_doc,
-                "pos": out_pos,
-                "witnessed": out_seen,
-            }
-        )
+    words, n = [int(w) for w in st[0]], int(st[1])
+    out: list[dict] = []
+    allp = rows.sort_values(["doc_id", "pos"], kind="mergesort")
+    for doc_id, grp in allp.groupby("doc_id", sort=True):
+        probed = [
+            (int(p), _bloom_probes(str(g)))
+            for p, g in zip(grp["pos"], grp["gram"])
+        ]
+        # check the whole doc first...
+        for pos, probes in probed:
+            seen = all(words[p // 63] >> (p % 63) & 1 for p in probes)
+            out.append(
+                {"shard": shard, "doc_id": int(doc_id), "pos": pos,
+                 "witnessed": bool(seen)}
+            )
+        # ...then insert its grams for every LATER doc
+        for _pos, probes in probed:
+            if not all(words[p // 63] >> (p % 63) & 1 for p in probes):
+                n += 1
+            for p in probes:
+                words[p // 63] |= 1 << (p % 63)
+    return (words, n), out
 
 
 def span_witness_stream(
@@ -1054,12 +979,10 @@ def span_witness_stream(
     anchors = gram_anchor_positions(
         docs, id_col=id_col, text_col=text_col, gram=gram, n_shards=n_shards
     )
-    return anchors.groupBy("shard").applyInPandasWithState(
-        _span_witness_fn,
-        outputStructType=SPAN_WITNESS_SCHEMA,
-        stateStructType=_SPAN_BLOOM_STATE,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _fold(
+        anchors, ["shard"], _span_witness_step,
+        out=SPAN_WITNESS_SCHEMA, state=_SPAN_BLOOM_STATE, init=_bloom_init,
+        mode="append",
     )
 
 
@@ -1112,37 +1035,26 @@ def _ewma_of(buf: list[tuple[int, int, int]]) -> float:
     return float(num) / float(den)
 
 
-def _ewma_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _ewma_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (user_id,) = key
-    if state.exists:
-        ts_us, eids, cents = state.get
-        buf = [tuple(map(int, r)) for r in zip(ts_us, eids, cents)]
-    else:
-        buf = []
-    for pdf in batches:
-        for ts, eid, v in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
-            buf.append(
-                (int(ts.value) // 1000, int(eid), _cents_decimal(v))
-            )
+    ts_us, eids, cents = st
+    buf = [tuple(map(int, r)) for r in zip(ts_us, eids, cents)]
+    for ts, eid, v in zip(rows["ts"], rows["event_id"], rows["value"]):
+        buf.append(
+            (int(ts.value) // 1000, int(eid), _cents_decimal(v))
+        )
     # keep only the K most recent by event time (late arrivals merge
     # correctly: order is by (ts, event_id), not arrival)
     buf.sort(key=lambda r: (r[0], r[1]), reverse=True)
     del buf[_EWMA_K:]
-    state.update(
-        ([r[0] for r in buf], [r[1] for r in buf], [r[2] for r in buf])
-    )
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": user_id,
-                "n_used": len(buf),
-                "last_ts": pd.Timestamp(buf[0][0] * 1000),
-                "ewma_cents": _ewma_of(buf),
-            }
-        ]
-    )
+    return ([r[0] for r in buf], [r[1] for r in buf], [r[2] for r in buf]), [
+        {
+            "user_id": user_id,
+            "n_used": len(buf),
+            "last_ts": pd.Timestamp(buf[0][0] * 1000),
+            "ewma_cents": _ewma_of(buf),
+        }
+    ]
 
 
 def ewma_stream(events: DataFrame) -> DataFrame:
@@ -1151,14 +1063,10 @@ def ewma_stream(events: DataFrame) -> DataFrame:
     key on unbounded keys), one updated score row emitted per key per
     micro-batch. Online twin of the catalog entry events_ewma_last16;
     parity is pinned in tests/test_streaming.py."""
-    return events.select("user_id", "ts", "event_id", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _ewma_fn,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _fold(
+        events.select("user_id", "ts", "event_id", "value"), ["user_id"], _ewma_step,
+        out=EWMA_SCHEMA, state=_EWMA_STATE_SCHEMA, init=lambda: ([], [], []),
+        mode="append",
     )
 
 
@@ -1201,23 +1109,18 @@ def _cms_bucket(j: int, key: str) -> int:
     return int(h, 16) % CMS_W
 
 
-def _cms_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _cms_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (shard,) = key
-    counters = list(state.get[0]) if state.exists else [0] * (CMS_D * CMS_W)
-    for pdf in batches:
-        for k in pdf["key"]:
-            for j in range(CMS_D):
-                counters[j * CMS_W + _cms_bucket(j, str(k))] += 1
-    state.update((counters,))
-    out = [
+    counters = list(st[0])
+    for k in rows["key"]:
+        for j in range(CMS_D):
+            counters[j * CMS_W + _cms_bucket(j, str(k))] += 1
+    return (counters,), [
         {"shard": shard, "j": j, "bucket": b, "c": counters[j * CMS_W + b]}
         for j in range(CMS_D)
         for b in range(CMS_W)
         if counters[j * CMS_W + b]
     ]
-    yield pd.DataFrame(out)
 
 
 def cms_stream(df: DataFrame, *, key_col: str, n_shards: int = 8) -> DataFrame:
@@ -1236,12 +1139,10 @@ def cms_stream(df: DataFrame, *, key_col: str, n_shards: int = 8) -> DataFrame:
         .cast("int")
         .alias("shard"),
     )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _cms_fn,
-        outputStructType=CMS_SCHEMA,
-        stateStructType=_CMS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["shard"], _cms_step,
+        out=CMS_SCHEMA, state=_CMS_STATE_SCHEMA, init=lambda: ([0] * (CMS_D * CMS_W),),
+        mode="update",
     )
 
 
@@ -1268,60 +1169,46 @@ def _net_op(first_op: str, last_op: str) -> str:
     return "U"
 
 
-def _net_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _net_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (user_id,) = key
-    if state.exists:
-        (first_op, first_ts, first_eid, last_op, last_cents,
-         last_ts, last_eid, n) = state.get
-        first_op, last_op = str(first_op), str(last_op)
-        first_ts, first_eid = int(first_ts), int(first_eid)
-        last_cents, last_ts, last_eid, n = (
-            int(last_cents),
-            int(last_ts),
-            int(last_eid),
-            int(n),
-        )
-    else:
-        first_op = last_op = None
-        first_ts = first_eid = 0
-        last_cents = last_ts = last_eid = n = 0
-    rows = []
-    for pdf in batches:
+    (first_op, first_ts, first_eid, last_op, last_cents,
+     last_ts, last_eid, n) = st
+    first_op, last_op = str(first_op), str(last_op)
+    first_ts, first_eid = int(first_ts), int(first_eid)
+    last_cents, last_ts, last_eid, n = (
+        int(last_cents),
+        int(last_ts),
+        int(last_eid),
+        int(n),
+    )
+    changes = [
+        (int(ts.value) // 1000, int(eid), str(op), _cents_decimal(v))
         for ts, eid, op, v in zip(
-            pdf["ts"], pdf["event_id"], pdf["op"], pdf["value"]
-        ):
-            rows.append(
-                (int(ts.value) // 1000, int(eid), str(op),
-                 _cents_decimal(v))
-            )
+            rows["ts"], rows["event_id"], rows["op"], rows["value"]
+        )
+    ]
     # both ends tracked by EVENT time, so a late-arriving row that is
     # older than the current first (or newer than the current last)
     # still lands in the right slot — matches the batch twin's
     # (ts, event_id) window ordering exactly
-    for ts_us, eid, op, cents in rows:
+    for ts_us, eid, op, cents in changes:
         if n == 0 or (ts_us, eid) < (first_ts, first_eid):
             first_op, first_ts, first_eid = op, ts_us, eid
         if n == 0 or (ts_us, eid) > (last_ts, last_eid):
             last_op, last_cents, last_ts, last_eid = op, cents, ts_us, eid
         n += 1
-    state.update(
-        (first_op, first_ts, first_eid, last_op, last_cents,
-         last_ts, last_eid, n)
-    )
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": user_id,
-                "first_op": first_op,
-                "last_op": last_op,
-                "net_op": _net_op(first_op, last_op),
-                "net_value_cents": None if last_op == "D" else last_cents,
-                "n_changes": n,
-            }
-        ]
-    )
+    return (
+        first_op, first_ts, first_eid, last_op, last_cents, last_ts, last_eid, n
+    ), [
+        {
+            "user_id": user_id,
+            "first_op": first_op,
+            "last_op": last_op,
+            "net_op": _net_op(first_op, last_op),
+            "net_value_cents": None if last_op == "D" else last_cents,
+            "n_changes": n,
+        }
+    ]
 
 
 def cdc_net_effect_stream(changes: DataFrame) -> DataFrame:
@@ -1333,14 +1220,13 @@ def cdc_net_effect_stream(changes: DataFrame) -> DataFrame:
     in tests/test_streaming.py). Input: (user_id, ts, event_id, op,
     value) rows; late arrivals fold correctly because the latest image
     is chosen by event time, not arrival."""
-    return changes.select(
-        "user_id", "ts", "event_id", "op", "value"
-    ).groupBy("user_id").applyInPandasWithState(
-        _net_fn,
-        outputStructType=NET_EFFECT_SCHEMA,
-        stateStructType=_NET_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        changes.select("user_id", "ts", "event_id", "op", "value"),
+        ["user_id"], _net_step,
+        out=NET_EFFECT_SCHEMA, state=_NET_STATE_SCHEMA,
+        # the ops are placeholders: the first row (n == 0) sets both ends
+        init=lambda: ("", 0, 0, "", 0, 0, 0, 0),
+        mode="update",
     )
 
 
@@ -1365,14 +1251,9 @@ def _qi_display(key: tuple) -> str:
     return "|".join(parts)
 
 
-def _kanon_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    k = int(state.get[0]) if state.exists else 0
-    for pdf in batches:
-        k += len(pdf)
-    state.update((k,))
-    yield pd.DataFrame([{"qi": _qi_display(key), "k": k}])
+def _kanon_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
+    k = int(st[0]) + len(rows)
+    return (k,), [{"qi": _qi_display(key), "k": k}]
 
 
 def k_anonymity_stream(rows: DataFrame, qi_cols: list[str]) -> DataFrame:
@@ -1389,12 +1270,10 @@ def k_anonymity_stream(rows: DataFrame, qi_cols: list[str]) -> DataFrame:
     pipe-bearing values would merge into one class and over-report k —
     exactly the failure a privacy gate must not have. The ``qi`` output
     column is a display-only injective encoding (see _qi_display)."""
-    return rows.select(*qi_cols).groupBy(*qi_cols).applyInPandasWithState(
-        _kanon_fn,
-        outputStructType=KANON_SCHEMA,
-        stateStructType=_KANON_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        rows.select(*qi_cols), qi_cols, _kanon_step,
+        out=KANON_SCHEMA, state=_KANON_STATE_SCHEMA, init=lambda: (0,),
+        mode="update",
     )
 
 
@@ -1409,61 +1288,53 @@ _ATTR_STATE_SCHEMA = (
 )
 
 
-def _attr_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _attr_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (user_id,) = key
-    if state.exists:
-        ts_l, eid_l, ty_l, n_convs = state.get
-        buf = [
-            (int(a), int(b), str(c)) for a, b, c in zip(ts_l, eid_l, ty_l)
-        ]
-        n_convs = int(n_convs)
-    else:
-        buf, n_convs = [], 0
-    rows: list[tuple] = []
-    for pdf in batches:
-        for ts, eid, et in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
-            rows.append((int(ts.value) // 1000, int(eid), str(et)))
+    ts_l, eid_l, ty_l, n_convs = st
+    buf = [
+        (int(a), int(b), str(c)) for a, b, c in zip(ts_l, eid_l, ty_l)
+    ]
+    n_convs = int(n_convs)
+    arrived = [
+        (int(ts.value) // 1000, int(eid), str(et))
+        for ts, eid, et in zip(rows["ts"], rows["event_id"], rows["event_type"])
+    ]
     # pending touches merge with the batch's rows and re-sort by EVENT
     # time — within-batch arrival order never matters, and a touch
     # arriving before its conversion's purchase (any interleaving
     # across batches that preserves per-user touch-before-purchase
     # order) lands in the right path
-    out: list[tuple] = []
+    out: list[dict] = []
     touches: list[tuple] = []
-    for ts_us, eid, et in sorted(buf + rows):
+    for ts_us, eid, et in sorted(buf + arrived):
         if et == "purchase":
             k = len(touches)
             if k == 0:
-                out.append((user_id, n_convs, "none", 1000))
+                out.append(
+                    {"user_id": user_id, "conv": n_convs,
+                     "attributed_type": "none", "credit": 1000}
+                )
             else:
                 base, rem = divmod(1000, k)
                 for i, (_t, _e, tty) in enumerate(touches):
                     out.append(
-                        (
-                            user_id,
-                            n_convs,
-                            tty,
-                            base + (rem if i == k - 1 else 0),
-                        )
+                        {
+                            "user_id": user_id,
+                            "conv": n_convs,
+                            "attributed_type": tty,
+                            "credit": base + (rem if i == k - 1 else 0),
+                        }
                     )
             n_convs += 1
             touches = []
         else:
             touches.append((ts_us, eid, et))
-    state.update(
-        (
-            [t[0] for t in touches],
-            [t[1] for t in touches],
-            [t[2] for t in touches],
-            n_convs,
-        )
-    )
-    if out:
-        yield pd.DataFrame(
-            out, columns=["user_id", "conv", "attributed_type", "credit"]
-        )
+    return (
+        [t[0] for t in touches],
+        [t[1] for t in touches],
+        [t[2] for t in touches],
+        n_convs,
+    ), out
 
 
 def attribution_linear_stream(events: DataFrame) -> DataFrame:
@@ -1491,14 +1362,11 @@ def attribution_linear_stream(events: DataFrame) -> DataFrame:
     path (the standard streaming-attribution tradeoff; a watermark
     reorder buffer would close it at the cost of delaying every
     emission by the lateness bound)."""
-    return events.select(
-        "user_id", "ts", "event_id", "event_type"
-    ).groupBy("user_id").applyInPandasWithState(
-        _attr_fn,
-        outputStructType=ATTR_SCHEMA,
-        stateStructType=_ATTR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _fold(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        ["user_id"], _attr_step,
+        out=ATTR_SCHEMA, state=_ATTR_STATE_SCHEMA, init=lambda: ([], [], [], 0),
+        mode="append",
     )
 
 
@@ -1557,25 +1425,20 @@ FUNNEL_SCHEMA = (
 _FUNNEL_STATE_SCHEMA = "vt_us bigint, ct_us bigint, pt_us bigint"
 
 
-def _funnel_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _funnel_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (user_id,) = key
-    if state.exists:
-        vt, ct, pt = state.get
-        vt = None if vt is None else int(vt)
-        ct = None if ct is None else int(ct)
-        pt = None if pt is None else int(pt)
-    else:
-        vt = ct = pt = None
-    rows: list[tuple] = []
-    for pdf in batches:
-        for ts, eid, et in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
-            rows.append((int(ts.value) // 1000, int(eid), str(et)))
+    vt, ct, pt = st
+    vt = None if vt is None else int(vt)
+    ct = None if ct is None else int(ct)
+    pt = None if pt is None else int(pt)
+    arrived = [
+        (int(ts.value) // 1000, int(eid), str(et))
+        for ts, eid, et in zip(rows["ts"], rows["event_id"], rows["event_type"])
+    ]
     # event-time order within the accumulated input: the first
     # qualifying event in ascending order IS the min the batch twin's
     # min-over-window computes
-    for ts_us, _eid, et in sorted(rows):
+    for ts_us, _eid, et in sorted(arrived):
         if et == "view":
             if vt is None:
                 vt = ts_us
@@ -1585,17 +1448,14 @@ def _funnel_fn(
         elif et == "purchase":
             if pt is None and ct is not None and ts_us > ct:
                 pt = ts_us
-    state.update((vt, ct, pt))
-    yield pd.DataFrame(
-        [
-            {
-                "user_id": user_id,
-                "reached_view": vt is not None,
-                "reached_click": ct is not None,
-                "reached_purchase": pt is not None,
-            }
-        ]
-    )
+    return (vt, ct, pt), [
+        {
+            "user_id": user_id,
+            "reached_view": vt is not None,
+            "reached_click": ct is not None,
+            "reached_purchase": pt is not None,
+        }
+    ]
 
 
 def funnel_stream(events: DataFrame) -> DataFrame:
@@ -1615,14 +1475,11 @@ def funnel_stream(events: DataFrame) -> DataFrame:
     tradeoff; the batch entry is the retrospective truth). Parity +
     split invariance in tests/test_streaming.py, both state providers
     in tests/test_rocksdb_state.py."""
-    return events.select(
-        "user_id", "ts", "event_id", "event_type"
-    ).groupBy("user_id").applyInPandasWithState(
-        _funnel_fn,
-        outputStructType=FUNNEL_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        ["user_id"], _funnel_step,
+        out=FUNNEL_SCHEMA, state=_FUNNEL_STATE_SCHEMA, init=lambda: (None, None, None),
+        mode="update",
     )
 
 
@@ -1668,8 +1525,10 @@ _CUSUM_STATE_SCHEMA = "hour_us array<bigint>, sums array<bigint>"
 _HOUR_US = 3_600_000_000
 
 
-def _make_cusum_fn(targets: dict[str, int], threshold: int):
-    """Build the stateful fold for cusum_stream.
+def _cusum_step(
+    targets: dict[str, int], threshold: int, key: tuple, rows: pd.DataFrame, st: tuple
+) -> tuple[tuple, list[dict]]:
+    """The stateful fold of cusum_stream.
 
     State per key is the map {hour -> exact cent sum} (one bigint pair
     per CALENDAR hour, independent of event volume); each emission
@@ -1677,40 +1536,27 @@ def _make_cusum_fn(targets: dict[str, int], threshold: int):
     so late arrivals into any past hour are folded correctly and the
     final emission is bit-equal to the batch twin for every
     micro-batch split."""
-
-    def fn(
-        key: tuple, batches: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        (etype,) = key
-        if state.exists:
-            hour_us, sums = state.get
-            hours = dict(zip((int(h) for h in hour_us), (int(s) for s in sums)))
-        else:
-            hours = {}
-        for pdf in batches:
-            for ts, v in zip(pdf["ts"], pdf["value"]):
-                hu = (int(ts.value) // 1000) // _HOUR_US * _HOUR_US
-                hours[hu] = hours.get(hu, 0) + _cents_decimal(v)
-        target = int(targets.get(etype, 0))
-        s = 0
-        for hu in sorted(hours):
-            # the literal control-chart recurrence; equals the batch
-            # twin's prefix-min closed form
-            s = max(0, s + (hours[hu] - target))
-        ks = sorted(hours)
-        state.update((ks, [hours[k] for k in ks]))
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": etype,
-                    "n_hours": len(hours),
-                    "cusum_cents": s,
-                    "alarm": s > threshold,
-                }
-            ]
-        )
-
-    return fn
+    (etype,) = key
+    hour_us, sums = st
+    hours = dict(zip((int(h) for h in hour_us), (int(s) for s in sums)))
+    for ts, v in zip(rows["ts"], rows["value"]):
+        hu = (int(ts.value) // 1000) // _HOUR_US * _HOUR_US
+        hours[hu] = hours.get(hu, 0) + _cents_decimal(v)
+    target = int(targets.get(etype, 0))
+    s = 0
+    for hu in sorted(hours):
+        # the literal control-chart recurrence; equals the batch
+        # twin's prefix-min closed form
+        s = max(0, s + (hours[hu] - target))
+    ks = sorted(hours)
+    return (ks, [hours[k] for k in ks]), [
+        {
+            "event_type": etype,
+            "n_hours": len(hours),
+            "cusum_cents": s,
+            "alarm": s > threshold,
+        }
+    ]
 
 
 def cusum_stream(
@@ -1724,16 +1570,11 @@ def cusum_stream(
     not event volume — and every emission refolds the recurrence over
     completed hours, so late data lands in its true hour.
     Parity vs cusum_batch is pinned in tests/test_cusum_stream.py."""
-    return (
-        events.select("event_type", "ts", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _make_cusum_fn(targets, threshold),
-            outputStructType=CUSUM_SCHEMA,
-            stateStructType=_CUSUM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    return _fold(
+        events.select("event_type", "ts", "value"), ["event_type"],
+        partial(_cusum_step, targets, threshold),
+        out=CUSUM_SCHEMA, state=_CUSUM_STATE_SCHEMA, init=lambda: ([], []),
+        mode="append",
     )
 
 
@@ -1812,37 +1653,26 @@ def _psi_of(live: list[int], ref: list[int]) -> float:
     return pico / 1e12
 
 
-def _make_psi_fn(ref: dict[str, list[int]], threshold: float):
-    def fn(
-        key: tuple, batches: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        (etype,) = key
-        if state.exists:
-            (counts,) = state.get
-            counts = [int(c) for c in counts]
-        else:
-            counts = [0] * _PSI_BUCKETS
-        for pdf in batches:
-            for v in pdf["value"]:
-                counts[_psi_bucket(_cents_decimal(v))] += 1
-        state.update((counts,))
-        if etype not in ref:
-            # no calibration -> no drift verdict (the batch twin's
-            # reference-keyed grid drops these types too)
-            return
-        psi = _psi_of(counts, ref[etype])
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": etype,
-                    "n_seen": sum(counts),
-                    "psi": psi,
-                    "drifted": psi > threshold,
-                }
-            ]
-        )
-
-    return fn
+def _psi_step(
+    ref: dict[str, list[int]], threshold: float, key: tuple, rows: pd.DataFrame, st: tuple
+) -> tuple[tuple, list[dict]]:
+    (etype,) = key
+    counts = [int(c) for c in st[0]]
+    for v in rows["value"]:
+        counts[_psi_bucket(_cents_decimal(v))] += 1
+    if etype not in ref:
+        # no calibration -> no drift verdict (the batch twin's
+        # reference-keyed grid drops these types too)
+        return (counts,), []
+    psi = _psi_of(counts, ref[etype])
+    return (counts,), [
+        {
+            "event_type": etype,
+            "n_seen": sum(counts),
+            "psi": psi,
+            "drifted": psi > threshold,
+        }
+    ]
 
 
 def psi_stream(
@@ -1866,16 +1696,11 @@ def psi_stream(
     emits an n_seen=0 row for every calibrated type. A monitor that
     must alarm on total silence should pair this with a freshness
     check; the asymmetry is pinned in tests/test_advice_r10.py."""
-    return (
-        events.select("event_type", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _make_psi_fn(ref, threshold),
-            outputStructType=PSI_SCHEMA,
-            stateStructType=_PSI_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    return _fold(
+        events.select("event_type", "value"), ["event_type"],
+        partial(_psi_step, ref, threshold),
+        out=PSI_SCHEMA, state=_PSI_STATE_SCHEMA, init=lambda: ([0] * _PSI_BUCKETS,),
+        mode="append",
     )
 
 
@@ -1952,40 +1777,29 @@ def _mk_fold(counts_by_day: dict[int, int]) -> tuple[int, int, int]:
     return n, s, var0
 
 
-def _make_mk_fn():
-    def fn(
-        key: tuple, batches: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        (etype,) = key
-        if state.exists:
-            day_us, counts = state.get
-            days = dict(zip((int(d) for d in day_us), (int(c) for c in counts)))
-        else:
-            days = {}
-        for pdf in batches:
-            for ts in pdf["ts"]:
-                du = (int(ts.value) // 1000) // _DAY_US * _DAY_US
-                days[du] = days.get(du, 0) + 1
-        ks = sorted(days)
-        state.update((ks, [days[k] for k in ks]))
-        n, s, var0 = _mk_fold(days)
-        if n < 2:
-            return
-        import math
+def _mk_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
+    import math
 
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": etype,
-                    "n_days": n,
-                    "s_stat": s,
-                    "var0": var0,
-                    "z_stat": float(s) / math.sqrt(float(var0)),
-                }
-            ]
-        )
-
-    return fn
+    (etype,) = key
+    day_us, counts = st
+    days = dict(zip((int(d) for d in day_us), (int(c) for c in counts)))
+    for ts in rows["ts"]:
+        du = (int(ts.value) // 1000) // _DAY_US * _DAY_US
+        days[du] = days.get(du, 0) + 1
+    ks = sorted(days)
+    new_st = (ks, [days[k] for k in ks])
+    n, s, var0 = _mk_fold(days)
+    if n < 2:
+        return new_st, []
+    return new_st, [
+        {
+            "event_type": etype,
+            "n_days": n,
+            "s_stat": s,
+            "var0": var0,
+            "z_stat": float(s) / math.sqrt(float(var0)),
+        }
+    ]
 
 
 def mann_kendall_stream(events: DataFrame) -> DataFrame:
@@ -1999,16 +1813,10 @@ def mann_kendall_stream(events: DataFrame) -> DataFrame:
     integers; z is one division by a correctly-rounded sqrt, so stream
     and batch are bit-equal. Parity vs mann_kendall_batch is pinned in
     tests/test_mann_kendall_stream.py."""
-    return (
-        events.select("event_type", "ts")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _make_mk_fn(),
-            outputStructType=MK_SCHEMA,
-            stateStructType=_MK_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    return _fold(
+        events.select("event_type", "ts"), ["event_type"], _mk_step,
+        out=MK_SCHEMA, state=_MK_STATE_SCHEMA, init=lambda: ([], []),
+        mode="append",
     )
 
 
@@ -2096,27 +1904,18 @@ def _ams_estimate(z: list[int], n: int) -> tuple[float, float]:
     return f2, simpson
 
 
-def _ams_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _ams_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (k,) = key
-    if state.exists:
-        z_arr, n = state.get
-        z = [int(v) for v in z_arr]
-        n = int(n)
-    else:
-        z, n = [0] * AMS_K, 0
-    for pdf in batches:
-        for item in pdf["item"]:
-            s = str(item)
-            n += 1
-            for i in range(AMS_K):
-                z[i] += _ams_sign(i, s)
-    state.update((z, n))
+    z_arr, n = st
+    z = [int(v) for v in z_arr]
+    n = int(n)
+    for item in rows["item"]:
+        s = str(item)
+        n += 1
+        for i in range(AMS_K):
+            z[i] += _ams_sign(i, s)
     f2, simpson = _ams_estimate(z, n)
-    yield pd.DataFrame(
-        [{"key": k, "n_items": n, "f2_est": f2, "simpson_est": simpson}]
-    )
+    return (z, n), [{"key": k, "n_items": n, "f2_est": f2, "simpson_est": simpson}]
 
 
 def ams_f2_stream(
@@ -2139,12 +1938,10 @@ def ams_f2_stream(
         F.col(key_col).cast("string").alias("key"),
         F.col(item_col).cast("string").alias("item"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _ams_fn,
-        outputStructType=AMS_SCHEMA,
-        stateStructType=_AMS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["key"], _ams_step,
+        out=AMS_SCHEMA, state=_AMS_STATE_SCHEMA, init=lambda: ([0] * AMS_K, 0),
+        mode="update",
     )
 
 
@@ -2226,24 +2023,17 @@ def _bk_rank(item: str) -> str:
     return hashlib.md5(str(item).encode()).hexdigest()
 
 
-def _bk_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _bk_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (k,) = key
-    if state.exists:
-        ranks, items = state.get
-        pairs = {str(r): str(i) for r, i in zip(ranks, items)}
-    else:
-        pairs = {}
-    for pdf in batches:
-        for item in pdf["item"]:
-            s = str(item)
-            pairs[_bk_rank(s)] = s
+    ranks, items = st
+    pairs = {str(r): str(i) for r, i in zip(ranks, items)}
+    for item in rows["item"]:
+        s = str(item)
+        pairs[_bk_rank(s)] = s
     kept = sorted(pairs.items())[:BOTTOMK_K]
-    state.update(([r for r, _ in kept], [i for _, i in kept]))
-    yield pd.DataFrame(
-        [{"key": k, "item": i, "rank_hex": r} for r, i in kept]
-    )
+    return ([r for r, _ in kept], [i for _, i in kept]), [
+        {"key": k, "item": i, "rank_hex": r} for r, i in kept
+    ]
 
 
 def bottomk_sample_stream(
@@ -2265,12 +2055,10 @@ def bottomk_sample_stream(
         F.col(key_col).cast("string").alias("key"),
         F.col(item_col).cast("string").alias("item"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _bk_fn,
-        outputStructType=BOTTOMK_SCHEMA,
-        stateStructType=_BOTTOMK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["key"], _bk_step,
+        out=BOTTOMK_SCHEMA, state=_BOTTOMK_STATE_SCHEMA, init=lambda: ([], []),
+        mode="update",
     )
 
 
@@ -2304,25 +2092,19 @@ BENFORD_SCHEMA = "key string, digit int, n_digit bigint, n_total bigint"
 _BENFORD_STATE_SCHEMA = "counts array<bigint>"
 
 
-def _benford_fn(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _benford_step(key: tuple, rows: pd.DataFrame, st: tuple) -> tuple[tuple, list[dict]]:
     (k,) = key
-    counts = [int(c) for c in state.get[0]] if state.exists else [0] * 9
-    for pdf in batches:
-        for v in pdf["value"]:
-            cents = _cents_decimal(v)
-            if cents > 0:
-                counts[int(str(cents)[0]) - 1] += 1
-    state.update((counts,))
+    counts = [int(c) for c in st[0]]
+    for v in rows["value"]:
+        cents = _cents_decimal(v)
+        if cents > 0:
+            counts[int(str(cents)[0]) - 1] += 1
     n = sum(counts)
-    yield pd.DataFrame(
-        [
-            {"key": k, "digit": d + 1, "n_digit": counts[d], "n_total": n}
-            for d in range(9)
-            if counts[d]
-        ]
-    )
+    return (counts,), [
+        {"key": k, "digit": d + 1, "n_digit": counts[d], "n_total": n}
+        for d in range(9)
+        if counts[d]
+    ]
 
 
 def benford_digit_stream(
@@ -2344,12 +2126,10 @@ def benford_digit_stream(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).alias("value"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _benford_fn,
-        outputStructType=BENFORD_SCHEMA,
-        stateStructType=_BENFORD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return _fold(
+        keyed, ["key"], _benford_step,
+        out=BENFORD_SCHEMA, state=_BENFORD_STATE_SCHEMA, init=lambda: ([0] * 9,),
+        mode="update",
     )
 
 

@@ -122,7 +122,7 @@ def test_mg_stream_equals_single_batch_run(spark, tmp_path, zipf_items):
 
 def test_batch_twin_entry_matches_streaming_fold(spark, sf_dir):
     """The heavy_hitters_mg_sharded catalog entry must produce EXACTLY
-    the summary the streaming _hh_fn produces when fed each shard's
+    the summary the streaming _hh_step produces when fed each shard's
     items in the same (event_id) order — the sketch algebra is shared,
     so the batch twin's oracle evidence covers the streaming operator."""
     from dsp_spark.operators.sampling import hash_int_sql

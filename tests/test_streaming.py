@@ -395,12 +395,8 @@ def test_load_shed_accounting(spark):
     assert kept2.exceptAll(kept).count() == 0
 
 
-@pytest.mark.skipif(
-    not stateful.tws_available(),
-    reason="transformWithState needs protobuf (not in container)",
-)
 def test_first_seen_dedup_stream(spark, tmp_path):
-    """transformWithState first-occurrence dedup == batch exact dedup."""
+    """Streaming first-occurrence dedup == batch exact dedup."""
     rows = [(i, f"doc{i % 4}") for i in range(20)]  # 4 distinct contents
     batch = spark.createDataFrame(rows, "row_id long, text string")
     src = str(tmp_path / "docs")
