@@ -59,12 +59,17 @@ class Pipeline:
 
     def compose(self, source_df: DataFrame) -> tuple[DataFrame, mc.Multicast]:
         """Assemble transform + router over a source frame and the
-        multicast delivering to every configured northbound."""
+        multicast delivering to every configured northbound. The routed
+        frame carries the `routed` observation: the rows every sink gets
+        and, with rules, the messages none matched (counted before the
+        explode, so the routed copies pass no extra CollectMetrics)."""
         df = source_df
         if self.transform is not None:
             df = self.transform(df)
         if self.config.rules:
-            df = route(df, self.config.rules)
+            df = route(df, self.config.rules, observe=ROUTED)
+        else:
+            df = observed(df, ROUTED)
         fan = mc.Multicast()
         for sink_cfg in self.config.sinks:
             fan.attach(sink_cfg.name, build_sink(sink_cfg, self.stores))
@@ -99,11 +104,11 @@ class Pipeline:
         }
         src = build_stream(self.spark, self.config.source)
         # received: source rows and bytes, before transform and router fan
-        # them out; routed: the rows every sink gets. Both are collected in
-        # the job that delivers the batch (streaming/metrics.py).
+        # them out; routed (compose): the rows every sink gets and the
+        # messages dropped. Both are collected in the job that delivers the
+        # batch (streaming/metrics.py).
         src = observed(src, RECEIVED, payload_bytes=True)
         df, fan = self.compose(src)
-        df = observed(df, ROUTED)
         writer = (
             df.writeStream.foreachBatch(fan)
             .option("checkpointLocation", checkpoint)

@@ -11,7 +11,8 @@ svc/sim.cpp:36-48, dsp-tools/tcp-client.cpp:65-81)::
 Two paths:
 
 * record-aligned frames (the Kafka path — each record is one frame):
-  parsed with native column expressions, zero Python;
+  parsed with native column expressions, zero Python, each header
+  field decoded once per row (see ``parse_telemetry``);
 * byte-chunk streams (the TCP path — frames span reads): per-connection
   reassembly in ``deframe_chunks`` via applyInPandas, mirroring the
   reference's streambuf loop (tcp.cpp:102-154; "return 0 means wait
@@ -46,15 +47,21 @@ def parse_telemetry(df: DataFrame, value_col: str = "value") -> DataFrame:
 
     Adds: frame_len, msg_type, client_id/sequence/ts (heartbeat),
     payload (dyn_message body), error (null when the frame is valid).
+
+    Two stacked projections, so each header field is decoded once per
+    row: the first decodes frame_len and msg_type (hex -> concat -> conv
+    each), the second derives error and the body columns from them.
+    Inlined, every CASE branch that reads a header field decodes it
+    again, because codegen shares no subexpression across conditional
+    branches. CollapseProject keeps the first projection, because its
+    aliases are not cheap and are read more than once. Codegen computes
+    error once, since every body column tests it first.
     """
     v = F.col(value_col)
-    blen = F.length(v)
-    frame_len = u16_le(v, 1)
-    msg_type = u16_le(v, 3)
-
+    frame_len, msg_type = F.col("frame_len"), F.col("msg_type")
     error = (
-        F.when(blen < MIN_FRAME, F.lit("short_frame"))
-        .when(frame_len > blen, F.lit("truncated_frame"))
+        F.when(F.length(v) < MIN_FRAME, F.lit("short_frame"))
+        .when(frame_len > F.length(v), F.lit("truncated_frame"))
         .when(
             (msg_type == TYPE_HEARTBEAT) & (frame_len < HEADER_LEN + HEARTBEAT_BODY),
             F.lit("short_heartbeat"),
@@ -67,10 +74,9 @@ def parse_telemetry(df: DataFrame, value_col: str = "value") -> DataFrame:
     is_hb = error.isNull() & (msg_type == TYPE_HEARTBEAT)
     is_dyn = error.isNull() & (msg_type == TYPE_DYN_MESSAGE)
 
-    return df.select(
+    header = df.select("*", u16_le(v, 1).alias("frame_len"), u16_le(v, 3).alias("msg_type"))
+    return header.select(
         "*",
-        frame_len.alias("frame_len"),
-        msg_type.alias("msg_type"),
         F.when(is_hb, u64_le(v, 5)).alias("client_id"),
         F.when(is_hb, u64_le(v, 13)).alias("sequence"),
         F.when(is_hb, u64_le(v, 21)).alias("ts"),

@@ -93,18 +93,35 @@ def file_sink(
 ) -> SinkFn:
     """parquet/csv/json file northbound (reference K6,
     doc/user-guide.adoc:24-26). Binary envelope columns are cast to
-    string for text formats (csv/json cannot carry raw bytes)."""
+    string for text formats (csv/json cannot carry raw bytes).
+
+    Parquet writes binary columns PLAIN, without a dictionary: message
+    keys and payloads are nearly all distinct, so their dictionaries cost
+    CPU per row, and on a large batch the payload dictionary outgrows its
+    page limit and is dropped anyway. On a small micro-batch the
+    dictionary does save bytes, since the routed copies of one message
+    share an entry; this trades those bytes for CPU. The other columns
+    (topic, rule, destination) keep dictionary encoding. A caller's
+    `options` are applied after, so they can turn it back on
+    (``parquet.enable.dictionary#<column>``)."""
 
     def write(batch: DataFrame, _epoch: int) -> None:
         out = batch
+        opts: dict = {}
         if fmt in ("csv", "json"):
             for name, dtype in batch.dtypes:
                 if dtype == "binary":
                     out = out.withColumn(name, F.col(name).cast("string"))
                 elif dtype.startswith("map<"):
                     out = out.withColumn(name, F.to_json(F.col(name)))
+        elif fmt == "parquet":
+            opts = {
+                f"parquet.enable.dictionary#{name}": "false"
+                for name, dtype in batch.dtypes
+                if dtype == "binary"
+            }
         writer = out.write.mode(mode).format(fmt)
-        for k, v in (options or {}).items():
+        for k, v in {**opts, **(options or {})}.items():
             writer = writer.option(k, v)
         writer.save(path)
 

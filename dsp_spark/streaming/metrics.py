@@ -15,9 +15,11 @@ counting costs no extra action. What each counter counts:
   before the transform and router run;
 * process_messages_total — rows handed to the transform (= received);
 * sent_messages_total — rows delivered over all sinks: the routed-row
-  count observed after the router, times the pipeline's number of sinks
+  count observed by the router, times the pipeline's number of sinks
   (every sink gets every routed row);
-* drop_messages_total — not yet fed.
+* drop_messages_total — messages dropped, by `drop_type` in `drops`:
+  `not_needed` counts the messages no router rule matched, observed
+  before the router's explode (reference: svc/handler.cpp:162-165).
 
 The `Summary:` line reports the received totals. If prometheus_client
 is installed, counters are exported on a scrape port (reference:
@@ -36,7 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 
-# observe() names: source rows and payload bytes, and rows after the router
+# observe() names: source rows and payload bytes, and the router's routed
+# rows (`messages`) and unmatched messages (`dropped`)
 RECEIVED = "received"
 ROUTED = "routed"
 # the binary payload column of a source frame: `value` for the file and
@@ -86,6 +89,8 @@ class MetricsListener(StreamingQueryListener):
             "sent_messages_total": 0,
             "drop_messages_total": 0,
         }
+        # drop_type -> messages; the labels of drop_messages_total
+        self.drops: dict[str, float] = {}
         self.stats = Stats()
         self.last_progress: dict | None = None
         self._prom = None
@@ -109,7 +114,10 @@ class MetricsListener(StreamingQueryListener):
         except ImportError:  # container has no prometheus_client: no-op
             return
         self._prom = {
-            name: prom.Gauge(name, f"dsp_spark {name}")
+            name: prom.Gauge(
+                name, f"dsp_spark {name}",
+                ["drop_type"] if name == "drop_messages_total" else (),
+            )
             for name in self.counters
         }
         prom.start_http_server(port)
@@ -151,11 +159,18 @@ class MetricsListener(StreamingQueryListener):
             self.counters["receive_bytes_total"] += nbytes
             self.stats.bytes += nbytes
         if ROUTED in obs:
-            routed = obs[ROUTED].asDict().get("messages") or 0
-            self.counters["sent_messages_total"] += routed * sinks
+            routed = obs[ROUTED].asDict()
+            self.counters["sent_messages_total"] += (routed.get("messages") or 0) * sinks
+            dropped = routed.get("dropped") or 0
+            self.counters["drop_messages_total"] += dropped
+            self.drops["not_needed"] = self.drops.get("not_needed", 0) + dropped
         if self._prom:
             for name, gauge in self._prom.items():
-                gauge.set(self.counters[name])
+                if name == "drop_messages_total":
+                    for drop_type, n in self.drops.items():
+                        gauge.labels(drop_type=drop_type).set(n)
+                else:
+                    gauge.set(self.counters[name])
 
     def sync(self, query) -> None:
         """Reconcile from query.recentProgress on the driver — listener

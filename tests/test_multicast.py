@@ -135,3 +135,47 @@ def test_concurrent_delivery_leaks_no_threads(spark):
     assert threading.active_count() == py_threads
     assert mx.getThreadCount() - jvm_threads < more
     assert [len(s) for s in stores] == [20 * (30 + more)] * 3
+
+
+def _encodings(path) -> dict[str, set[str]]:
+    """Column path -> encodings over every column chunk of a parquet dir."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, set[str]] = {}
+    for f in sorted(path.glob("*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(g).column(c)
+                out.setdefault(col.path_in_schema, set()).update(col.encodings)
+    return out
+
+
+@pytest.mark.parametrize("override", [False, True])
+def test_parquet_sink_writes_binary_columns_plain(spark, tmp_path, override):
+    """key and value (binary) are written PLAIN with no dictionary; the
+    string columns keep theirs; a caller's option turns it back on. The
+    binaries repeat, so parquet would pick a dictionary for them too."""
+    from dsp_spark.sinks.multicast import file_sink
+
+    rows = [
+        (i, bytes([i % 40]) * 8, "dev-test", {"type": "click"}, bytes([i % 50]) * 200,
+         ("clicks", "all")[i % 2], ("nb", "audit")[i % 2])
+        for i in range(3000)
+    ]
+    schema = ("id long, key binary, topic string, properties map<string,string>, "
+              "value binary, rule string, destination string")
+    batch = spark.createDataFrame(rows, schema)
+    options = {"parquet.enable.dictionary#value": "true"} if override else None
+    file_sink("parquet", str(tmp_path / "out"), options)(batch, 0)
+
+    back = spark.read.parquet(str(tmp_path / "out"))
+    assert back.schema == batch.schema
+    assert sorted(back.collect()) == sorted(batch.collect())
+    enc = _encodings(tmp_path / "out")
+    dictionary = {c for c, e in enc.items() if "PLAIN_DICTIONARY" in e}
+    assert {"topic", "rule", "destination"} <= dictionary
+    assert "PLAIN" in enc["key"] and "key" not in dictionary
+    assert ("value" in dictionary) == override
+    if not override:
+        assert "PLAIN" in enc["value"]

@@ -125,3 +125,17 @@ router:
     # sorted by priority
     assert [r.name for r in cfg.rules] == ["all", "hb"]
     assert cfg.rules[0].is_wildcard
+
+
+def test_router_is_one_codegen_stage(spark):
+    """No higher-order function (array_compact's filter lambda) in the
+    executed plan, and the explode runs inside whole-stage codegen; also
+    with the observation the pipeline attaches."""
+    import re
+
+    df = msgs_df(spark, [(1, HB), (2, DYN), (3, EMPTY)])
+    for out in (route(df, [ALLOW_HB, DENY_HB, WILD]),
+                route(df, [ALLOW_HB, DENY_HB, WILD], observe="routed_plan")):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "lambdafunction" not in plan and "ArrayFilter" not in plan, plan
+        assert re.search(r"^[ +\-|:]*\*\(\d+\) Generate ", plan, re.M), plan

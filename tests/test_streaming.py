@@ -174,6 +174,65 @@ def test_pipeline_counters_are_exact(spark, tmp_path, n_sinks):
     assert f"{len(rows)} messages" in pipe.summary()
 
 
+def test_pipeline_counts_unmatched_messages_as_dropped(spark, tmp_path):
+    """Messages no rule matches are counted into drop_messages_total
+    (drop_type not_needed), exactly, in the delivering job."""
+    kinds = ("click", "view", "error", "signup")
+    rows = [(i.to_bytes(4, "little"), kinds[i % 7 % 4]) for i in range(2000)]
+    src = tmp_path / "in"
+    for part in (rows[:900], rows[900:]):
+        spark.createDataFrame(part, "value binary, kind string").coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+    cfg = PipelineConfig.from_dict(
+        {
+            "interfaces": {
+                "southbound": {
+                    "type": "file",
+                    "path": str(src),
+                    "schema": "value binary, kind string",
+                    "options": {"maxFilesPerTrigger": "1"},
+                },
+                "northbound": [{"name": "nb", "type": "memory"}],
+            },
+            "router": [
+                {"name": "clicks", "priority": 1,
+                 "condition": {"key": "type", "value": "click"},
+                 "action": "include", "subject": "clicks"},
+                {"name": "views", "priority": 2,
+                 "condition": {"key": "type", "value": "view"},
+                 "action": "include", "subject": "views"},
+                {"name": "not-errors", "priority": 3,
+                 "condition": {"key": "type", "value": "error"},
+                 "action": "exclude", "subject": "ok"},
+            ],
+        }
+    )
+
+    def to_messages(df):
+        return df.select(
+            F.when(F.col("kind") != "signup", F.create_map(F.lit("type"), F.col("kind")))
+            .otherwise(F.create_map())
+            .alias("properties"),
+            F.lit("events").alias("topic"),
+            "value",
+        )
+
+    pipe = Pipeline(spark, cfg, transform=to_messages)
+    pipe.start(checkpoint=str(tmp_path / "ckpt"), available_now=True)
+    pipe.await_termination(120)
+
+    n = {k: sum(1 for _v, kind in rows if kind == k) for k in kinds}
+    # error matches no rule; signup has no type, so only the exclude rule
+    # matches it; click and view match their include and the exclude rule
+    c = pipe.listener.counters
+    assert c["drop_messages_total"] == n["error"]
+    assert pipe.listener.drops == {"not_needed": n["error"]}
+    assert len(pipe.stores["nb"]) == 2 * n["click"] + 2 * n["view"] + n["signup"]
+    assert c["sent_messages_total"] == len(pipe.stores["nb"])
+    assert c["receive_messages_total"] == len(rows)
+
+
 def test_listener_is_removed_on_stop_and_kept_across_reload(spark, tmp_path):
     """stop() deregisters the metrics listener and reload() registers the
     same one again, so its totals carry over; removing it once more after

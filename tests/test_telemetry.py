@@ -117,3 +117,22 @@ def test_parse_is_native(spark):
     frame = tm.make_heartbeat(1, 1, 1)
     plan = tm.parse_telemetry(frames_df(spark, [frame]))._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _decodes(plan: str, pos: int) -> int:
+    """Decodes of the u16le header field at 1-based byte `pos` in a plan:
+    each one starts conv(concat(substring(hex(substring(<col>, pos, 2)), ..."""
+    import re
+
+    return len(re.findall(rf"conv\(concat\(substring\(hex\(substring\(\w+#\d+, {pos}, 2\)\)", plan))
+
+
+def test_parse_decodes_each_header_field_once(spark):
+    """frame_len (bytes 1-2) and msg_type (bytes 3-4) are decoded in one
+    projection that error and the body columns read, not again in every
+    CASE branch that tests them; also when only payload is kept, as in
+    the envelope projection of the pipeline."""
+    df = tm.parse_telemetry(frames_df(spark, [tm.make_heartbeat(1, 1, 1)]))
+    for out in (df, df.select("payload")):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert (_decodes(plan, 1), _decodes(plan, 3)) == (1, 1), plan
