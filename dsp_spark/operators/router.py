@@ -43,15 +43,6 @@ from pyspark.sql import functions as F
 from dsp_spark.config import RouterRule
 
 
-def _flags(df: DataFrame, rules: list[RouterRule]) -> tuple[DataFrame, list[Column]]:
-    """`df` with one boolean column per rule, true where the rule matches
-    (never null), and those columns. The flags are one projection, so
-    whole-stage codegen's subexpression elimination probes each property
-    key the rules test once per row, however many rules test it."""
-    flags = {f"__dsp_h{i}": _rule_condition(r) for i, r in enumerate(rules)}
-    return df.withColumns(flags), [F.col(c) for c in flags]
-
-
 def _rule_condition(rule: RouterRule) -> Column:
     if rule.is_wildcard:
         return F.lit(True)
@@ -105,7 +96,12 @@ def route(
             "*", F.lit("").alias("rule"), F.lit("").alias("destination")
         )
     other = [c for c in df.columns if c != "topic"]
-    flagged, flags = _flags(df, rules)
+    # one boolean column per rule, never null, all in one projection: so
+    # codegen's subexpression elimination probes each property key the
+    # rules test once per row, however many rules test it
+    names = [f"__dsp_h{i}" for i in range(len(rules))]
+    flagged = df.withColumns(dict(zip(names, map(_rule_condition, rules))))
+    flags = [F.col(c) for c in names]
     if observe is not None:
         n_hits = reduce(operator.add, [flag.cast("int") for flag in flags])
         flagged = flagged.observe(
